@@ -12,8 +12,10 @@ Splits the pages stream into the reference's routed sub-streams:
   transactions, client_metadata, auth, conn_lifecycle
   ops         dispatched main-operation rows (extract.extract_ops)
 
-Each stream is a lazy DataFrame off the same scan; pipeline.build persists
-`kept`/`ops` so the Arrow parse runs once per materialization wave.
+There is one router, routed_parse(): it routes and parses every bounded line
+in one scan. derive_streams() splits its output into the streams above.
+split_streams() applies it to the lazy routed frame; pipeline.build applies
+it to the frame read back from the routed parquet checkpoint.
 """
 
 from __future__ import annotations
@@ -25,45 +27,53 @@ from ..functions import prefilter
 from ..functions.extract import extract_ops
 from ..functions.parse import conn_id, ns_coll, ns_db, parse_lines
 
+ROUTE_FLAG_COLS = ("is_ignored", "is_ttl", "category")
+
 
 def split_streams(pages: DataFrame,
                   ignore_patterns: list[str] | None = None) -> dict[str, DataFrame]:
-    text = F.col("text")
-    bounded = pages.filter(~prefilter.is_oversized(text))
-    oversized = pages.filter(prefilter.is_oversized(text))
-
-    ignore = prefilter.should_ignore(text, ignore_patterns)
-    ignored = bounded.filter(ignore).withColumn(
-        "category", prefilter.ignored_category(text)
-    )
-    # html is never consumed downstream of the router — drop it before the
-    # parse so the (cacheable) parsed stream doesn't carry the binary payload
-    kept_raw = bounded.filter(~ignore).drop("html")
-    kept = parse_lines(kept_raw)
-
-    # TTL pre-pass (processTtlOperation, LogParser.java:938-970): parse,
-    # require attr.namespace, namespace filter, take numDeleted/durationMillis
-    ttl_raw = bounded.filter(prefilter.is_ttl_line(text)).drop("html")
-    ttl_pre = ttl_pre_records(parse_lines(ttl_raw), pages.columns)
-
+    """Every routed stream as a lazy view over one scan of `pages`."""
     return {
-        "oversized": oversized,
-        "ignored": ignored,
+        "oversized": pages.filter(prefilter.is_oversized(F.col("text"))),
+        **derive_streams(routed_parse(pages, ignore_patterns=ignore_patterns)),
+    }
+
+
+def derive_streams(routed: DataFrame,
+                   conn_side: DataFrame | None = None) -> dict[str, DataFrame]:
+    """kept / ignored / ttl_pre, the side channels and ops of a routed frame
+    (routed_parse output, lazy or read back from a checkpoint).
+
+    client_metadata, auth and conn_lifecycle read `conn_side` when given: a
+    subset of kept holding every row and column those three records use
+    (pipeline.build passes one shared checkpoint); otherwise kept itself."""
+    kept = routed.filter(~F.col("is_ignored")).drop(*ROUTE_FLAG_COLS)
+    conn_side = kept if conn_side is None else conn_side
+    return {
+        "ignored": routed.filter(F.col("is_ignored")).select(
+            *[c for c in ("url", "warc_ts", "lang", "text", "shard", "node")
+              if c in routed.columns],
+            # ignored_category() always resolves (its CASE has an otherwise),
+            # so this coalesce never fires — it only pins the non-null type,
+            # which the flag's CASE WHEN and the parquet round-trip erase.
+            F.coalesce(F.col("category"), F.lit("OTHER")).alias("category"),
+        ),
         "kept": kept,
-        "ttl_pre": ttl_pre,
+        "ttl_pre": ttl_pre_records(routed.filter(F.col("is_ttl"))),
         "errors": error_records(kept),
         "transactions": transaction_records(kept),
-        "client_metadata": client_metadata_records(kept),
-        "auth": auth_records(kept),
-        "conn_lifecycle": conn_lifecycle_records(kept),
+        "client_metadata": client_metadata_records(conn_side),
+        "auth": auth_records(conn_side),
+        "conn_lifecycle": conn_lifecycle_records(conn_side),
         "ops": extract_ops(kept),
     }
 
 
-def ttl_pre_records(ttl_parsed: DataFrame, pages_columns: list[str]) -> DataFrame:
-    """TTL pre-pass projection over already-parsed TTL lines (the shared tail
-    of split_streams' ttl_pre and the routed-checkpoint derivation)."""
-    shard_cols = [c for c in ("shard", "node") if c in pages_columns]
+def ttl_pre_records(ttl_parsed: DataFrame) -> DataFrame:
+    """TTL pre-pass (processTtlOperation, LogParser.java:938-970) over
+    already-parsed TTL lines: require attr.namespace, namespace filter, take
+    numDeleted/durationMillis."""
+    shard_cols = [c for c in ("shard", "node") if c in ttl_parsed.columns]
     return (
         ttl_parsed.filter(F.col("a_namespace").isNotNull())
         .select(
@@ -78,28 +88,18 @@ def ttl_pre_records(ttl_parsed: DataFrame, pages_columns: list[str]) -> DataFram
     )
 
 
-ROUTE_FLAG_COLS = ("is_ignored", "is_ttl", "category")
-
-
 def routed_parse(pages: DataFrame,
                  ignore_patterns: list[str] | None = None) -> DataFrame:
-    """ONE-scan routed parse (guide §2.4: remove shuffles/passes outright —
-    here the removed cost is three extra full scans of the raw text column).
+    """ONE-scan routed parse (guide §2.4: remove shuffles/passes outright).
 
-    split_streams() hands each consumer a lazy view over the raw scan, so a
-    materializing pipeline paid four decompressions of `text` per wave: the
-    kept parse, the TTL pre-pass parse, and the ignored/ignored-sample
-    predicate scans. This operator computes the routing predicates ONCE (JVM,
-    whole-stage codegen — identical expressions to split_streams), then runs
-    the Arrow parse over every bounded line with parse skipped for
-    ignored-non-TTL rows (they emit null parse fields, exactly the
-    unparseable-line path). Output = parsed schema + ROUTE_FLAG_COLS, from
-    which pipeline.build derives kept / ignored / ttl_pre with column-pruned
-    scans of one checkpoint instead of re-reading the raw table.
-
-    Row/field equivalence with split_streams (oracle-checked downstream):
-    - kept:   rows !is_ignored, parse fields from the same _parse_row
-    - ignored: rows is_ignored, same first-match category expression
+    Computes the routing predicates ONCE per bounded line (JVM, whole-stage
+    codegen), then runs the Arrow parse over every bounded line with parse
+    skipped for ignored-non-TTL rows (they emit null parse fields, exactly
+    the unparseable-line path). Output = parsed schema + ROUTE_FLAG_COLS;
+    derive_streams() takes kept / ignored / ttl_pre from it by flag, so no
+    consumer re-reads the raw text column:
+    - kept:   rows !is_ignored
+    - ignored: rows is_ignored, first-match category
     - ttl:    rows is_ttl are always parsed (TTL lines are also counted as
               ignored — LogParser.java:641-649 — so the skip predicate is
               `ignore AND NOT ttl`)

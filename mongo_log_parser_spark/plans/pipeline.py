@@ -3,28 +3,30 @@
   scan → prefilter (F1-F4) → vectorized parse (E1-E2) → route (F5-F11)
        → extract (E3-E20) → aggregates (A1-A12) + joins (J1-J3) → sinks
 
-Stage materialization strategy (measured at sf0.1, local[32]):
-  parquet   write `routed` (parsed + routing flags, ONE raw scan for
-            kept/ignored/TTL — route.routed_parse) and `ops` (dispatched) to
-            parquet and read them back. One Arrow parse total; every
-            downstream consumer reads flat columnar data with
-            pruning/pushdown. 10x faster than Spark's in-memory cache here
-            (InMemoryRelation encode of wide rows was the bottleneck), and it
-            is exactly the stage-checkpoint pattern a 100 TB pipeline uses
-            between parse and aggregate waves.
-  bucketed  like parquet, but the ops checkpoint is written as a parquet
-            table bucketed+sorted by query_hash (sinks/bucketed.py): one
-            repartition at write time, then the whole A4/A5/A5b query-hash
-            family (groupBys + the kv-submap join) runs with zero Exchange
-            because the scan itself carries HashPartitioning(query_hash).
-            The layout a 100 TB deployment would choose when the query-hash
-            analyses dominate the workload.
-  memory    .persist(MEMORY_AND_DISK) barriers (kept for comparison).
-  none      fully lazy — right for small interactive/correctness queries.
+build() has one materialization strategy, stage checkpoints between the
+parse and the aggregate waves:
+
+  routed     route.routed_parse (parsed lines + routing flags, ONE raw scan
+             for kept/ignored/TTL) written to parquet and read back; every
+             stream is route.derive_streams over that checkpoint, so the
+             Arrow parse runs once and each consumer reads flat columnar data
+             with pruning/pushdown. 10x faster than Spark's in-memory cache
+             at sf0.1 (InMemoryRelation encode of wide rows was the
+             bottleneck).
+  ops        the dispatched ops, derived from the routed checkpoint and
+             written as a second checkpoint: one serial write beats a lazy
+             dispatch cascade per ops sink (3-20x, round 6).
+  conn_side  the client-metadata/auth/lifecycle subset feeding driver_stats,
+             localCheckpointed lazily once and released by unpersist().
+
+build(cache=False) writes nothing: the streams are the lazy
+route.split_streams view, row-for-row equal to the checkpointed ones
+(tests/test_log_pipeline.py) — right for small interactive queries.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import uuid
@@ -32,11 +34,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..functions import prefilter
 from ..operators import aggregates as agg
 from ..operators import joins, route
 from ..sources import datagen
+
+log = logging.getLogger(__name__)
 
 
 def read_pages(spark: SparkSession, sf: float | None = None, path: str | None = None) -> DataFrame:
@@ -56,134 +60,93 @@ class PipelineResult:
     streams: dict[str, DataFrame]
     sinks: dict[str, DataFrame] = field(default_factory=dict)
     workdir: str | None = None
-    tables: list[str] = field(default_factory=list)
+    conn_side: DataFrame | None = None
 
     def unpersist(self) -> None:
-        for name in self.tables:
+        """Release the conn-side checkpoint blocks and the stage dir."""
+        if self.conn_side is not None:
             try:
-                from ..sinks import bucketed
-
-                bucketed.drop_bucketed(
-                    next(iter(self.streams.values())).sparkSession, name)
+                # DataFrame.unpersist() only drops cache-manager entries; a
+                # localCheckpoint's blocks belong to the RDD under its plan.
+                self.conn_side._jdf.queryExecution().analyzed().rdd().unpersist(False)
             except Exception:
-                pass
-        for df in self.streams.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+                log.warning("could not release the conn-side checkpoint", exc_info=True)
+            self.conn_side = None
         if self.workdir:
-            shutil.rmtree(self.workdir, ignore_errors=True)
+            _remove_dir(self.workdir)
+
+
+def _remove_dir(path: str) -> None:
+    try:
+        shutil.rmtree(path)
+    except FileNotFoundError:
+        pass
+    except OSError:
+        log.warning("could not remove stage dir %s", path, exc_info=True)
+
+
+def _checkpoint(df: DataFrame, path: str) -> DataFrame:
+    schema = df.schema
+    df.write.mode("overwrite").parquet(path)
+    # explicit schema: skips the footer-inference job on read-back
+    return df.sparkSession.read.schema(schema).parquet(path)
+
+
+def _checkpointed_streams(pages: DataFrame, workdir: str,
+                          ignore_patterns: list[str] | None) -> tuple[dict[str, DataFrame], DataFrame]:
+    # ONE routed checkpoint: kept + ignored + TTL in a single scan/parse/write;
+    # the ignored rows only add their text bytes (null parse fields are free
+    # under parquet RLE).
+    ckpt = _checkpoint(route.routed_parse(pages, ignore_patterns=ignore_patterns),
+                       os.path.join(workdir, "routed"))
+    # client_metadata, auth and conn_lifecycle share ONE scan: each filters
+    # to a tiny subset (a few % of rows together), but as separate plans
+    # driver_stats would scan the checkpoint four times per wave (meta and
+    # auth each decompressing the wide `text` column, plus the lifecycle
+    # union's start/end pair). The union-predicate subset is localCheckpointed
+    # lazily ONCE and every side channel re-applies its exact filter over it,
+    # so rows and schema equal deriving straight from kept (each record
+    # filter implies the union predicate). localCheckpoint truncates lineage:
+    # losing an executor after it materializes fails the job, so a cluster
+    # deployment should swap it for a parquet stage like the two here.
+    is_meta = (F.col("comp") == "NETWORK") & (F.col("msg") == "client metadata")
+    is_auth = (F.col("comp") == "ACCESS") & (F.col("msg") == "Successfully authenticated")
+    is_lifecycle = F.col("msg").isin("Connection accepted", "Connection ended")
+    conn_side = ckpt.filter(
+        ~F.col("is_ignored") & (is_meta | is_auth | is_lifecycle)
+    ).select(
+        "url", "ts_str", "ctx", "comp", "msg", "has_attr", "a_remote",
+        "drv_name", "drv_version", "os_type", "os_name", "platform",
+        "compressors", "a_user", "a_db", "a_mechanism", "a_connection_id",
+        "text",
+    ).localCheckpoint(eager=False)
+    streams = {
+        "oversized": pages.filter(prefilter.is_oversized(F.col("text"))),
+        **route.derive_streams(ckpt, conn_side=conn_side),
+    }
+    # ops derive FROM the routed checkpoint, so this write runs no second parse
+    streams["ops"] = _checkpoint(streams["ops"], os.path.join(workdir, "ops"))
+    return streams, conn_side
 
 
 def build(
     pages: DataFrame,
     cache: bool = True,
-    materialize: str = "parquet",
     workdir: str | None = None,
-    ops_checkpoint: bool = True,
     ignore_patterns: list[str] | None = None,
 ) -> PipelineResult:
-    spark = pages.sparkSession
-    tables: list[str] = []
-    if cache and materialize in ("parquet", "bucketed"):
-        # Don't construct the full lazy split_streams DAG here: every entry
-        # except `oversized` is immediately replaced by its checkpoint-derived
-        # form below, and building the lazy trees (two parse plans, the
-        # extract cascade, five side channels) costs seconds of driver-side
-        # analysis per run — pure serial floor at every parallelism width.
-        from ..functions import prefilter
-
-        streams = {"oversized": pages.filter(prefilter.is_oversized(F.col("text")))}
+    conn_side = None
+    if cache:
+        own_workdir = workdir is None
         workdir = workdir or os.path.join(
             datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}"
         )
-        # ONE routed checkpoint (route.routed_parse): kept + ignored + TTL in
-        # a single scan/parse/write. Before round 6 this phase wrote only
-        # `kept` and left ignored/ttl_pre as lazy views over the RAW table, so
-        # one materialization wave decompressed the raw text column four
-        # times (kept parse, ttl parse, ignored, ignored_sample — measured
-        # 28.8 + 4.4 + 5.5 + 5.5 s of the 53 s sf1.0 headline). Now the three
-        # sink families scan the column-pruned checkpoint instead; the write
-        # grows only by the ignored rows' text bytes (~18% of rows, null
-        # parse fields — free under parquet RLE).
-        # Checkpoint first, then derive `ops` FROM the checkpoint before
-        # writing it — otherwise the ops write re-runs the full mapInPandas
-        # parse over every kept line (2x parse cost; this was the round-1
-        # scaling-gate failure).
-        routed = route.routed_parse(pages, ignore_patterns=ignore_patterns)
-        routed_path = os.path.join(workdir, "routed")
-        routed_schema = routed.schema
-        routed.write.mode("overwrite").parquet(routed_path)
-        # explicit schema: skips the footer-inference job on read-back
-        ckpt = spark.read.schema(routed_schema).parquet(routed_path)
-        streams["kept"] = ckpt.filter(~F.col("is_ignored")).drop(*route.ROUTE_FLAG_COLS)
-        streams["ignored"] = ckpt.filter(F.col("is_ignored")).select(
-            *[c for c in ("url", "warc_ts", "lang", "text", "shard", "node")
-              if c in ckpt.columns],
-            # ignored_category() always resolves (its CASE has an otherwise),
-            # so this coalesce never fires — it only restores the non-null
-            # schema the lazy CASE expression carries, which the parquet
-            # round-trip erased.
-            F.coalesce(F.col("category"), F.lit("OTHER")).alias("category"),
-        )
-        streams["ttl_pre"] = route.ttl_pre_records(
-            ckpt.filter(F.col("is_ttl")), pages.columns)
-        if ops_checkpoint:
-            ops_path = os.path.join(workdir, "ops")
-            ops_df = route.extract_ops(streams["kept"])
-            if materialize == "bucketed":
-                from ..sinks import bucketed
-
-                streams["ops"], tname = bucketed.write_bucketed(
-                    ops_df, ops_path, key="query_hash",
-                    n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-                tables.append(tname)
-            else:
-                ops_schema = ops_df.schema
-                ops_df.write.mode("overwrite").parquet(ops_path)
-                streams["ops"] = spark.read.schema(ops_schema).parquet(ops_path)
-        else:
-            # lazy dispatch: each ops sink re-runs the JVM when-cascade over
-            # the kept checkpoint scan — trades one serial write job for a
-            # little repeated codegen work inside already-parallel scans
-            streams["ops"] = route.extract_ops(streams["kept"])
-        # client_metadata, auth and conn_lifecycle share ONE scan: each
-        # filters to a tiny subset (a few % of rows together), but as
-        # separate lazy plans driver_stats' materialization would scan the
-        # checkpoint FOUR times per wave — client-metadata (probe side) and
-        # auth (broadcast side) each decompressing the full `text` column,
-        # the widest one stored, plus the lifecycle union's start/end pair
-        # re-reading the url/ts_str/ctx string columns twice. The
-        # union-predicate subset is localCheckpointed lazily ONCE and every
-        # side channel re-applies its exact original filter over it, so rows
-        # and schema are identical to deriving straight from kept (each
-        # record filter implies the union predicate).
-        is_meta = (F.col("comp") == "NETWORK") & (F.col("msg") == "client metadata")
-        is_auth = (F.col("comp") == "ACCESS") & (F.col("msg") == "Successfully authenticated")
-        is_lifecycle = F.col("msg").isin("Connection accepted", "Connection ended")
-        conn_side = ckpt.filter(
-            ~F.col("is_ignored") & (is_meta | is_auth | is_lifecycle)
-        ).select(
-            "url", "ts_str", "ctx", "comp", "msg", "has_attr", "a_remote",
-            "drv_name", "drv_version", "os_type", "os_name", "platform",
-            "compressors", "a_user", "a_db", "a_mechanism", "a_connection_id",
-            "text",
-        ).localCheckpoint(eager=False)
-        # re-derive the side channels off the checkpointed parse
-        streams.update(
-            {
-                "errors": route.error_records(streams["kept"]),
-                "transactions": route.transaction_records(streams["kept"]),
-                "client_metadata": route.client_metadata_records(conn_side),
-                "auth": route.auth_records(conn_side),
-                "conn_lifecycle": route.conn_lifecycle_records(conn_side),
-            }
-        )
-    elif cache and materialize == "memory":
-        streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
-        streams["kept"] = streams["kept"].persist(StorageLevel.MEMORY_AND_DISK)
-        streams["ops"] = streams["ops"].persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            streams, conn_side = _checkpointed_streams(pages, workdir, ignore_patterns)
+        except BaseException:
+            if own_workdir:
+                _remove_dir(workdir)
+            raise
     else:
         streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
 
@@ -204,17 +167,5 @@ def build(
         "ignored": agg.ignored_stats(streams["ignored"]),
         "ignored_sample": route.ignored_sample(streams["ignored"]),
     }
-    return PipelineResult(streams=streams, sinks=sinks, workdir=workdir, tables=tables)
-
-
-def run_metrics(pages: DataFrame) -> dict[str, int]:
-    """Scan-level routing metrics (ProcessingStats analog)."""
-    from ..functions import prefilter
-
-    text = F.col("text")
-    row = pages.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(prefilter.is_oversized(text).cast("long")).alias("oversized"),
-        F.sum((~prefilter.is_oversized(text) & prefilter.should_ignore(text)).cast("long")).alias("ignored"),
-    ).collect()[0]
-    return {"total": row["total"], "oversized": row["oversized"], "ignored": row["ignored"]}
+    return PipelineResult(streams=streams, sinks=sinks, workdir=workdir,
+                          conn_side=conn_side)

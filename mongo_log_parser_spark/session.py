@@ -72,11 +72,11 @@ def build_session(
         # broadcast limits — keep autoBroadcast on for the lookup joins.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Subset-key co-partitioning (SPARK-35703): lets a join whose children
-        # are both hash-partitioned on a PREFIX of the join keys (here: the
-        # query_hash-bucketed ops checkpoint feeding A4's base⋈sub join on
-        # [query_hash, ns, op]) run without re-shuffling either side. Equal
-        # full keys imply equal subset hashes, so this is purely a planner
-        # capability unlock, not a semantics change.
+        # are both hash-partitioned on a SUBSET of the join keys run without
+        # re-shuffling either side. Equal full keys imply equal subset
+        # hashes, so this is purely a planner capability unlock, not a
+        # semantics change; dropping it would change plans, so it stays
+        # until an A/B measures that.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # Checkpoint/sink parquet codec (guide §6/§9): zstd. Measured on the
         # routed checkpoint (3-round interleaved A/B, sf0.1): write and read

@@ -1,7 +1,7 @@
 """Structured Streaming variant of the parse→route→aggregate pipeline.
 
 The reference is strictly batch (SURVEY.md §2.7) — this is graft-added
-capability: the same prefilter/parse/extract stages run unchanged on a
+capability: the batch router (route.split_streams) runs unchanged on a
 file-source stream of pages, with
 
 - a watermarked sliding-window operation rollup (late data handled by the
@@ -26,9 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..functions.extract import extract_ops
-from ..functions.parse import parse_lines
-from ..functions import prefilter
+from ..operators.route import split_streams
 
 
 def pages_stream(spark: SparkSession, path: str, schema=None, max_files: int = 4) -> DataFrame:
@@ -50,11 +48,7 @@ def pages_stream(spark: SparkSession, path: str, schema=None, max_files: int = 4
 
 
 def streaming_ops(pages: DataFrame) -> DataFrame:
-    text = F.col("text")
-    kept = pages.filter(~prefilter.is_oversized(text)).filter(
-        ~prefilter.should_ignore(text)
-    ).drop("html")
-    return extract_ops(parse_lines(kept))
+    return split_streams(pages)["ops"]
 
 
 def windowed_op_counts(ops: DataFrame, window: str = "1 day", watermark: str = "2 days") -> DataFrame:
@@ -156,13 +150,7 @@ def streaming_conn_sessions(pages: DataFrame, timeout_ms: int | None = None) -> 
     stateful operator (observed 40+ empty batches after the last file). A
     live deployment runs a processingTime trigger with an explicit stop
     policy; the eviction test polls the sink and stops the query."""
-    from ..operators.route import conn_lifecycle_records
-
-    text = F.col("text")
-    kept = pages.filter(~prefilter.is_oversized(text)).filter(
-        ~prefilter.should_ignore(text)
-    ).drop("html")
-    events = conn_lifecycle_records(parse_lines(kept))
+    events = split_streams(pages)["conn_lifecycle"]
     return events.groupBy("conn_id").applyInPandasWithState(
         _make_session_fn(timeout_ms),
         outputStructType=_SESSION_OUT,

@@ -51,6 +51,9 @@ def test_resumable_manifest_skips_completed_days(spark):
         tot = m.agg(F.sum("rows_in"), F.sum("ops")).collect()[0]
         assert tot[0] == spark.read.parquet(path).count()
         assert tot[1] == full_ops.count()
+        # and within each day every input line is routed exactly once
+        for r in m.collect():
+            assert r["rows_in"] == r["oversized"] + r["ignored"] + r["kept"], r["day"]
 
         # idempotent: a third run has nothing to do
         r3 = manifest.run_resumable(spark, path, out)
