@@ -93,87 +93,92 @@ def run_job(spark, args) -> dict:
         prefilter.load_filter_config(args.filter_config) if args.filter_config else None
     )
     res = pipeline.build(pages, ignore_patterns=ignore_patterns)
-    ops = res.streams["ops"]
-    if args.ns_filter:
-        # The reference applies user namespace filters inside dispatch
-        # (matchesNamespaceFilter, LogParserTask.java:361-408), gating every
-        # ns-scoped analysis — so AND the predicate into ns_pass and rebuild
-        # ALL ops-based sinks from the same filtered stream (globals and
-        # --shards copies therefore agree: a shard rollup sums to its global).
-        from .operators import aggregates as agg
+    try:
+        ops = res.streams["ops"]
+        if args.ns_filter:
+            # The reference applies user namespace filters inside dispatch
+            # (matchesNamespaceFilter, LogParserTask.java:361-408), gating every
+            # ns-scoped analysis — so AND the predicate into ns_pass and rebuild
+            # ALL ops-based sinks from the same filtered stream (globals and
+            # --shards copies therefore agree: a shard rollup sums to its global).
+            from .operators import aggregates as agg
 
-        pred = logfiles.namespace_filter_predicate(args.ns_filter)
-        ops = ops.withColumn(
-            "ns_pass", F.col("ns_pass") & pred(F.col("db"), F.col("coll")))
-        res.streams["ops"] = ops
-        res.streams["ttl_pre"] = res.streams["ttl_pre"].filter(
-            pred(F.col("db"), F.col("coll")))
-        res.sinks.update({
-            "main_ops": agg.main_ops(ops),
-            "ttl_ops": agg.ttl_ops(res.streams["ttl_pre"]),
-            "op_stats": agg.op_stats(ops),
-            "query_hash": agg.query_hash(ops),
-            "plan_cache": agg.plan_cache(ops),
-            "index_stats": agg.index_stats(ops),
-            "slow_planning": agg.slow_planning(ops),
-            "app_conn_stats": agg.app_conn_stats(ops),
-        })
+            pred = logfiles.namespace_filter_predicate(args.ns_filter)
+            ops = ops.withColumn(
+                "ns_pass", F.col("ns_pass") & pred(F.col("db"), F.col("coll")))
+            res.streams["ops"] = ops
+            res.streams["ttl_pre"] = res.streams["ttl_pre"].filter(
+                pred(F.col("db"), F.col("coll")))
+            res.sinks.update({
+                "main_ops": agg.main_ops(ops),
+                "ttl_ops": agg.ttl_ops(res.streams["ttl_pre"]),
+                "op_stats": agg.op_stats(ops),
+                "query_hash": agg.query_hash(ops),
+                "plan_cache": agg.plan_cache(ops),
+                "index_stats": agg.index_stats(ops),
+                "slow_planning": agg.slow_planning(ops),
+                "app_conn_stats": agg.app_conn_stats(ops),
+            })
 
-    # reference defaults: driver stats and appName stats are opt-in
-    sinks = dict(res.sinks)
-    if args.shards and "shard" in ops.columns:
-        # per-shard copies of the reference's shard-tracked accumulators
-        # (LogParser.java:557-565) via per_shard_grouped: shard/node as extra
-        # group keys — one shuffle per sink, no driver-side shard loop. The
-        # --ns-filter gate applies to these exactly as to the global rollups.
-        from .operators import aggregates as agg
+        # reference defaults: driver stats and appName stats are opt-in
+        sinks = dict(res.sinks)
+        if args.shards and "shard" in ops.columns:
+            # per-shard copies of the reference's shard-tracked accumulators
+            # (LogParser.java:557-565) via per_shard_grouped: shard/node as extra
+            # group keys — one shuffle per sink, no driver-side shard loop. The
+            # --ns-filter gate applies to these exactly as to the global rollups.
+            from .operators import aggregates as agg
 
-        sinks.update({
-            "shard_main_ops": agg.per_shard_grouped(agg.main_ops, ops),
-            "shard_ttl_ops": agg.per_shard_grouped(agg.ttl_ops, res.streams["ttl_pre"]),
-            "shard_plan_cache": agg.per_shard_grouped(agg.plan_cache, ops),
-            "shard_query_hash": agg.per_shard_grouped(agg.query_hash, ops),
-            "shard_error_codes": agg.per_shard_grouped(agg.error_codes, res.streams["errors"]),
-            "shard_transactions": agg.per_shard_grouped(
-                agg.transactions, res.streams["transactions"]),
-            "shard_index_stats": agg.per_shard_grouped(agg.index_stats, ops),
-        })
-    if not args.drivers:
-        sinks.pop("driver_stats", None)
-    if not args.app_name_stats:
-        sinks.pop("app_conn_stats", None)
-    if args.redact:
-        sinks = writers.redact_sinks(sinks)
+            sinks.update({
+                "shard_main_ops": agg.per_shard_grouped(agg.main_ops, ops),
+                "shard_ttl_ops": agg.per_shard_grouped(agg.ttl_ops, res.streams["ttl_pre"]),
+                "shard_plan_cache": agg.per_shard_grouped(agg.plan_cache, ops),
+                "shard_query_hash": agg.per_shard_grouped(agg.query_hash, ops),
+                "shard_error_codes": agg.per_shard_grouped(agg.error_codes, res.streams["errors"]),
+                "shard_transactions": agg.per_shard_grouped(
+                    agg.transactions, res.streams["transactions"]),
+                "shard_index_stats": agg.per_shard_grouped(agg.index_stats, ops),
+            })
+        if not args.drivers:
+            sinks.pop("driver_stats", None)
+        if not args.app_name_stats:
+            sinks.pop("app_conn_stats", None)
+        if args.redact:
+            sinks = writers.redact_sinks(sinks)
 
-    os.makedirs(args.out, exist_ok=True)
-    if not args.json_only:
-        writers.write_parquet_sinks(sinks, os.path.join(args.out, "sinks"))
-        if args.csv:
-            writers.write_csv_sinks(sinks, os.path.join(args.out, "csv"))
-        for flag, sink in (
-            (args.plan_cache_csv, "plan_cache"), (args.query_hash_csv, "query_hash"),
-            (args.error_codes_csv, "error_codes"), (args.transaction_csv, "transactions"),
-            (args.ignored_analysis, "ignored"),
-        ):
-            if flag and sink in sinks:
-                writers.write_sink_csv(
-                    sink, sinks[sink],
-                    flag if os.path.isabs(flag) else os.path.join(args.out, flag))
-        if args.html:
-            writers.write_html_report(
-                sinks,
-                args.html if os.path.isabs(args.html) else os.path.join(args.out, args.html),
-                top_sections=args.top_sections)
-    writers.write_json_report(
-        sinks, os.path.join(args.out, "report.json"),
-        metadata={"pages": pages_path or "log-files", "engine": "mongo_log_parser_spark"},
-        top_sections=args.top_sections,
-    )
-    if args.text:
-        writers.console_report(sinks)
-    summary = {"out": args.out, "sinks": sorted(sinks)}
-    print(json.dumps(summary))
-    res.unpersist()
+        os.makedirs(args.out, exist_ok=True)
+        if not args.json_only:
+            # every sink is computed once, here; the writers below read it back
+            # from parquet. --json-only keeps the live plans: it reads them once
+            sinks = writers.write_parquet_sinks(sinks, os.path.join(args.out, "sinks"))
+            if args.csv:
+                writers.write_csv_sinks(sinks, os.path.join(args.out, "csv"))
+            for flag, sink in (
+                (args.plan_cache_csv, "plan_cache"), (args.query_hash_csv, "query_hash"),
+                (args.error_codes_csv, "error_codes"), (args.transaction_csv, "transactions"),
+                (args.ignored_analysis, "ignored"),
+            ):
+                if flag and sink in sinks:
+                    writers.write_sink_csv(
+                        sink, sinks[sink],
+                        flag if os.path.isabs(flag) else os.path.join(args.out, flag))
+            if args.html:
+                writers.write_html_report(
+                    sinks,
+                    args.html if os.path.isabs(args.html) else os.path.join(args.out, args.html),
+                    top_sections=args.top_sections)
+        writers.write_json_report(
+            sinks, os.path.join(args.out, "report.json"),
+            metadata={"pages": pages_path or "log-files", "engine": "mongo_log_parser_spark"},
+            top_sections=args.top_sections,
+        )
+        if args.text:
+            writers.console_report(sinks)
+        summary = {"out": args.out, "sinks": sorted(sinks)}
+        print(json.dumps(summary))
+    finally:
+        # releases the stage dir and cached blocks on failure too
+        res.unpersist()
     return summary
 
 

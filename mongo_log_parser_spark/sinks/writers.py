@@ -1,5 +1,11 @@
 """K1-K6 + A12 — sink writers and the JSON report.
 
+Each sink is computed once: `write_parquet_sinks` writes every sink
+concurrently and returns the written parquet read back, and the CSV, HTML,
+JSON and console writers read those scans instead of re-running the sink
+plans (the reference likewise renders every format from one in-memory state,
+JsonReportGenerator.java:29-89).
+
 - CSV sinks: one file per accumulator, rows sorted by count desc — the
   reference's reportCsv pattern (Accumulator.java:169-177 and the per-
   accumulator variants, QueryHashAccumulator.java:174-183 etc.)
@@ -17,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, Window
@@ -33,6 +40,10 @@ SINK_SORT_KEYS = {
 
 
 def _sorted(name: str, df: DataFrame) -> DataFrame:
+    if name == "slow_planning":
+        # the sink's own top-K key (aggregates.slow_planning); a parquet
+        # read-back over several files does not keep its row order
+        return df.orderBy(F.desc("planning_us"), F.asc("url"))
     key = SINK_SORT_KEYS.get(name)
     return df.orderBy(F.desc(key)) if key and key in df.columns else df
 
@@ -82,9 +93,34 @@ def redact_sinks(sinks: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return out
 
 
-def write_parquet_sinks(sinks: dict[str, DataFrame], out_dir: str) -> None:
-    for name, df in sinks.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+def write_parquet_sinks(sinks: dict[str, DataFrame], out_dir: str) -> dict[str, DataFrame]:
+    """Write every sink to `out_dir/<name>`, concurrently from a driver thread
+    pool as wide as the cluster's default parallelism, and return each written
+    sink read back ({name: parquet scan}) so later writers never recompute a
+    sink plan. Each write runs with the caller's job group and local
+    properties. A failed write is raised once every other write has finished."""
+    from pyspark.util import inheritable_thread_target
+
+    if not sinks:
+        return {}
+    spark = next(iter(sinks.values())).sparkSession
+    paths = {name: os.path.join(out_dir, name) for name in sinks}
+
+    def write(name: str) -> None:
+        sinks[name].write.mode("overwrite").parquet(paths[name])
+
+    width = min(len(sinks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        # wrapped per write: each copies the caller's local properties into
+        # its own object, as each SQL execution stores its id there
+        futures = [pool.submit(inheritable_thread_target(spark)(write), name)
+                   for name in sinks]
+    for f in futures:
+        f.result()
+    # the written schema is known, so the read-back infers nothing (no
+    # footer-reading job per sink) and an empty sink reads back empty
+    return {name: spark.read.schema(df.schema).parquet(paths[name])
+            for name, df in sinks.items()}
 
 
 def console_report(sinks: dict[str, DataFrame], n: int = 20) -> None:
@@ -111,11 +147,10 @@ def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
     the summary totals stay exact regardless of any cap."""
     truncation: dict[str, dict[str, int]] = {}
 
-    def rows(name, section=None, limit=None, sort=True):
+    def rows(name, section=None, limit=None):
         if name not in sinks:  # opt-out sinks (--drivers / --app-name-stats off)
             return []
-        df = sinks[name]
-        df = _sorted(name, df) if sort else df
+        df = _sorted(name, sinks[name])
         if limit:
             df = df.limit(limit)
         out = [r.asDict(recursive=True) for r in df.collect()]
@@ -163,7 +198,7 @@ def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
         "planCacheAnalysis": rows("plan_cache", "planCacheAnalysis", limit=top_sections),
         "indexStats": rows("index_stats", "indexStats", limit=top_sections),
         "transactions": rows("transactions", "transactions", limit=top_sections),
-        "slowPlanning": rows("slow_planning", "slowPlanning", limit=top_slow_planning, sort=False),
+        "slowPlanning": rows("slow_planning", "slowPlanning", limit=top_slow_planning),
         "appNameConnections": rows("app_conn_stats", "appNameConnections", limit=top_sections),
         "driverStats": rows("driver_stats", "driverStats", limit=top_sections),
         "ignoredCategories": rows("ignored"),

@@ -6,30 +6,16 @@ at sf0.01), plus targeted semantic invariants from SURVEY.md §2.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.util import assert_df_equals_sql
+from tests.util import assert_df_equals_sql, formatted_plan
 
 import __spark_entry__ as entrymod
 
 QUERY_NAMES = sorted(entrymod.queries().keys())
-
-
-def _formatted_plan(df) -> str:
-    """The text df.explain(mode="formatted") prints; skips the test when
-    this PySpark build prints no plan."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    plan = buf.getvalue()
-    if "Physical Plan" not in plan:
-        pytest.skip("formatted plan text unavailable")
-    return plan
 
 
 @pytest.fixture(scope="session")
@@ -141,7 +127,7 @@ def test_broadcast_join_in_enrich_plan(spark):
     pages = pipeline.read_pages(spark, sf=0.001)
     ll = pipeline.read_lookup(spark, "lang_locale")
     hc = pipeline.read_lookup(spark, "host_class")
-    plan = _formatted_plan(enrich_pages(pages, ll, hc))
+    plan = formatted_plan(enrich_pages(pages, ll, hc))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -153,7 +139,7 @@ def test_pushdown_reaches_scan(spark):
     from mongo_log_parser_spark.plans import pipeline
 
     pages = pipeline.read_pages(spark, sf=0.001)
-    plan = _formatted_plan(aggregates.op_stats(route.split_streams(pages)["ops"]))
+    plan = formatted_plan(aggregates.op_stats(route.split_streams(pages)["ops"]))
     assert "html" not in plan  # binary column pruned from the parquet scan
 
 
@@ -247,7 +233,7 @@ def test_meta_auth_shared_scan_equivalence(spark):
         rdd_ids = set()
         for name in ("client_metadata", "auth", "conn_lifecycle"):
             df = res.streams[name]
-            plan = _formatted_plan(df)
+            plan = formatted_plan(df)
             assert "Scan parquet" not in plan, name  # reads the checkpoint RDD
             ids = set(re.findall(r"MapPartitionsRDD\[(\d+)\]", plan))
             assert len(ids) == 1, (name, plan[:500])  # even the union's two legs

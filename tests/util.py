@@ -1,7 +1,11 @@
 from __future__ import annotations
 
+import contextlib
+import io
 import math
 from collections import Counter
+
+import pytest
 
 
 def canon(v):
@@ -36,3 +40,15 @@ def assert_df_equals_sql(sdf, con, sql, name=""):
         s_only = list((sm - om).items())[:3]
         o_only = list((om - sm).items())[:3]
         raise AssertionError(f"{name}: value mismatch\n spark-only: {s_only}\n oracle-only: {o_only}")
+
+
+def formatted_plan(df) -> str:
+    """The text df.explain(mode="formatted") prints; skips the test when
+    this PySpark build prints no plan."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    plan = buf.getvalue()
+    if "Physical Plan" not in plan:
+        pytest.skip("formatted plan text unavailable")
+    return plan
