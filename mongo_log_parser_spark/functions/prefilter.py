@@ -45,11 +45,6 @@ def _contains_any(col: Column, patterns: list[str]) -> Column:
     return reduce(lambda a, b: a | b, (col.contains(p) for p in patterns))
 
 
-def is_parseable(text: Column) -> Column:
-    """Bounded-line + JSON-prefix gate (S3 + F4)."""
-    return (F.length(text) <= F.lit(MAX_LINE_CHARS)) & F.ltrim(text).startswith("{")
-
-
 def is_oversized(text: Column) -> Column:
     return F.length(text) > F.lit(MAX_LINE_CHARS)
 

@@ -177,7 +177,7 @@ def run_job(spark, args) -> dict:
         summary = {"out": args.out, "sinks": sorted(sinks)}
         print(json.dumps(summary))
     finally:
-        # releases the stage dir and cached blocks on failure too
+        # removes the stage dir on failure too
         res.unpersist()
     return summary
 

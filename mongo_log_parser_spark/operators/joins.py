@@ -14,7 +14,7 @@ Deterministic replacements for reference nondeterminism (SURVEY.md §4 O10):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 EXCLUDED_DRIVER_PREFIX = "NetworkInterface"
@@ -52,58 +52,38 @@ def conn_lifetimes(conn_lifecycle: DataFrame, sample_mod: int = 10) -> DataFrame
 def driver_stats(meta: DataFrame, auth: DataFrame, conn_lifecycle: DataFrame) -> DataFrame:
     """A11 — driver/version/os/platform/compressors/username rollup.
 
-    One scan + two broadcast joins replaces the reference's three file passes
-    (SURVEY.md §3.2).
-
-    `enriched` feeds BOTH the identity-key rollup (base) and the per-conn key
-    map (conn_key); as a lazy plan the whole meta-scan ⋈ auth subtree would
-    be INLINED twice and executed twice per materialization (6 source scans
-    total — plans/r06/driver_stats_before.txt). The lazy localCheckpoint
-    materializes the tiny enriched subset (the client-metadata rows, ~2-4% of
-    the stream) once on first use and both consumers reuse it — on the lazy
-    contract path this also halves the number of full parse passes this sink
-    triggers. eager=False: pipeline.build constructs sinks without running
-    them; the checkpoint happens inside the consuming action."""
-    m = meta.filter(driver_allowed(F.col("driver")))
-    enriched = m.join(F.broadcast(auth_by_conn(auth)), "conn_id", "left") \
-        .localCheckpoint(eager=False)
+    One grouping over the metadata rows replaces the reference's three file
+    passes (TwoPassDriverStatsAccumulator.java:55-250, SURVEY.md §3.2). The
+    auth map and the sampled per-connection lifetimes are broadcast-joined
+    onto the metadata rows, and a connection's lifetime counts only on its
+    first metadata line (first by concat(ts_str, url); a line without ts_str
+    is never first), whose keys the connection belongs to. So one groupBy(keys) computes the counts, the
+    sample lines and the lifetime stats; `enriched` is used once, and no
+    checkpoint is needed to keep the meta ⋈ auth subtree from running twice.
+    sampled_lifetimes is null, not 0, for a key without one."""
     keys = ["driver", "version", "os_type", "platform", "compressors", "username"]
-
-    base = enriched.groupBy(*keys).agg(
+    arrival = F.concat(F.col("ts_str"), F.col("url"))
+    first_line = (
+        F.col("conn_id").isNotNull() & arrival.isNotNull()
+        & (F.row_number().over(Window.partitionBy("conn_id").orderBy(arrival.asc_nulls_last())) == 1)
+    )
+    lifetimes = conn_lifetimes(conn_lifecycle).select("conn_id", "lifetime_ms")
+    enriched = (
+        meta.filter(driver_allowed(F.col("driver")))
+        .join(F.broadcast(auth_by_conn(auth)), "conn_id", "left")
+        .join(F.broadcast(lifetimes), "conn_id", "left")
+        .withColumn("lifetime_ms", F.when(first_line, F.col("lifetime_ms")))
+    )
+    out = enriched.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("connection_count"),
         F.countDistinct("remote").alias("unique_hosts"),
         F.expr("min_by(text, concat(ts_str, url))").alias("sample_metadata_line"),
         F.expr("min_by(sample_auth_line, concat(ts_str, url)) FILTER (WHERE sample_auth_line IS NOT NULL)").alias(
             "sample_auth_line"
         ),
-    )
-    # connection → driver key (first metadata line wins, deterministic)
-    conn_key = (
-        enriched.filter(F.col("conn_id").isNotNull())
-        .groupBy("conn_id")
-        .agg(*[F.expr(f"min_by({k}, concat(ts_str, url))").alias(k) for k in keys])
-    )
-    lifetimes = conn_lifetimes(conn_lifecycle).join(F.broadcast(conn_key), "conn_id", "inner")
-    lt_agg = lifetimes.groupBy(*keys).agg(
         F.floor(F.avg("lifetime_ms")).cast("long").alias("avg_lifetime_ms"),
         F.max("lifetime_ms").alias("max_lifetime_ms"),
-        F.count(F.lit(1)).alias("sampled_lifetimes"),
-    )
-    # null-safe equi-join: username (and other key parts) may legitimately be
-    # null for never-authenticated connections. lt_agg is an aggregate over
-    # the sampled lifetimes keyed by the (small) driver-identity key set, so
-    # broadcast it: SortMergeJoin → BroadcastHashJoin, removing one Exchange+
-    # Sort pair on each side of the final join (plan-verified, plans/r06/
-    # driver_stats_{before,after}.txt).
-    cond = None
-    for k in keys:
-        c = base[k].eqNullSafe(lt_agg[k])
-        cond = c if cond is None else cond & c
-    joined = base.join(F.broadcast(lt_agg), cond, "left")
-    out = joined.select(
-        *[base[k] for k in keys],
-        "connection_count", "unique_hosts", "sample_metadata_line", "sample_auth_line",
-        "avg_lifetime_ms", "max_lifetime_ms", "sampled_lifetimes",
+        F.nullif(F.count("lifetime_ms"), F.lit(0)).alias("sampled_lifetimes"),
     )
     # A11 completeness (DriverStatsEntry.java:14-120): the entry key already
     # contains username and the (sorted) compressor set, so the per-entry

@@ -15,7 +15,8 @@ Splits the pages stream into the reference's routed sub-streams:
 There is one router, routed_parse(): it routes and parses every bounded line
 in one scan. derive_streams() splits its output into the streams above.
 split_streams() applies it to the lazy routed frame; pipeline.build applies
-it to the frame read back from the routed parquet checkpoint.
+it to the frame read back from the routed parquet stage, together with its
+ops and conn_side stages.
 """
 
 from __future__ import annotations
@@ -39,15 +40,16 @@ def split_streams(pages: DataFrame,
     }
 
 
-def derive_streams(routed: DataFrame,
+def derive_streams(routed: DataFrame, ops: DataFrame | None = None,
                    conn_side: DataFrame | None = None) -> dict[str, DataFrame]:
     """kept / ignored / ttl_pre, the side channels and ops of a routed frame
-    (routed_parse output, lazy or read back from a checkpoint).
+    (routed_parse output, lazy or read back from a stage).
 
-    client_metadata, auth and conn_lifecycle read `conn_side` when given: a
-    subset of kept holding every row and column those three records use
-    (pipeline.build passes one shared checkpoint); otherwise kept itself."""
-    kept = routed.filter(~F.col("is_ignored")).drop(*ROUTE_FLAG_COLS)
+    `ops` and `conn_side` are the staged extract_ops(kept_rows(routed)) and
+    conn_side_subset(kept_rows(routed)), as pipeline.build writes them; each
+    one not given is derived lazily from kept. client_metadata, auth and
+    conn_lifecycle read conn_side, which holds every row and column they use."""
+    kept = kept_rows(routed)
     conn_side = kept if conn_side is None else conn_side
     return {
         "ignored": routed.filter(F.col("is_ignored")).select(
@@ -65,8 +67,13 @@ def derive_streams(routed: DataFrame,
         "client_metadata": client_metadata_records(conn_side),
         "auth": auth_records(conn_side),
         "conn_lifecycle": conn_lifecycle_records(conn_side),
-        "ops": extract_ops(kept),
+        "ops": extract_ops(kept) if ops is None else ops,
     }
+
+
+def kept_rows(routed: DataFrame) -> DataFrame:
+    """The parsed lines of a routed frame that enter the main pipeline."""
+    return routed.filter(~F.col("is_ignored")).drop(*ROUTE_FLAG_COLS)
 
 
 def ttl_pre_records(ttl_parsed: DataFrame) -> DataFrame:
@@ -204,6 +211,28 @@ def transaction_records(kept: DataFrame) -> DataFrame:
         | F.col("commit_type").isNotNull()
         | F.col("duration_ms").isNotNull()
     )
+
+
+# every kept column client_metadata_records, auth_records and
+# conn_lifecycle_records read
+CONN_SIDE_COLS = (
+    "url", "ts_str", "ctx", "comp", "msg", "has_attr", "a_remote",
+    "drv_name", "drv_version", "os_type", "os_name", "platform",
+    "compressors", "a_user", "a_db", "a_mechanism", "a_connection_id", "text",
+)
+
+
+def conn_side_subset(kept: DataFrame) -> DataFrame:
+    """The few % of kept rows and the CONN_SIDE_COLS that the three
+    connection-side records below read. Each record filter implies this
+    predicate, so deriving them from the subset equals deriving them from
+    kept. pipeline.build stages it once: read straight from the routed stage,
+    meta and auth would each decompress the wide `text` column and the
+    lifecycle union would scan it twice."""
+    is_meta = (F.col("comp") == "NETWORK") & (F.col("msg") == "client metadata")
+    is_auth = (F.col("comp") == "ACCESS") & (F.col("msg") == "Successfully authenticated")
+    is_lifecycle = F.col("msg").isin("Connection accepted", "Connection ended")
+    return kept.filter(is_meta | is_auth | is_lifecycle).select(*CONN_SIDE_COLS)
 
 
 def client_metadata_records(kept: DataFrame) -> DataFrame:

@@ -97,8 +97,9 @@ def write_parquet_sinks(sinks: dict[str, DataFrame], out_dir: str) -> dict[str, 
     """Write every sink to `out_dir/<name>`, concurrently from a driver thread
     pool as wide as the cluster's default parallelism, and return each written
     sink read back ({name: parquet scan}) so later writers never recompute a
-    sink plan. Each write runs with the caller's job group and local
-    properties. A failed write is raised once every other write has finished."""
+    sink plan. pipeline.build writes its stages with it too. Each write runs
+    with the caller's job group and local properties. A failed write is raised
+    once every other write has finished."""
     from pyspark.util import inheritable_thread_target
 
     if not sinks:

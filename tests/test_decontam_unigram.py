@@ -14,7 +14,7 @@ from mongo_log_parser_spark.contracts.data_oracle import (
 )
 from mongo_log_parser_spark.functions import textstats
 from mongo_log_parser_spark.operators import decontam
-from tests.util import assert_df_equals_sql
+from tests.util import assert_df_equals_sql, formatted_plan
 
 DOCS = "read_parquet('/root/testdata/sf0.001/documents.parquet')"
 
@@ -62,8 +62,7 @@ def test_decontaminate_removes_only_hits(crafted):
 
 def test_contamination_broadcast_plan(crafted):
     train, ev = crafted
-    plan = decontam.contamination_hits(train, ev, n=5) \
-        ._jdf.queryExecution().executedPlan().toString()
+    plan = formatted_plan(decontam.contamination_hits(train, ev, n=5))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -106,7 +105,6 @@ def test_unigram_scores_sf0001_vs_oracle(spark, duck):
 
 def test_unigram_vocab_broadcast_plan(spark, crafted):
     train, ev = crafted
-    plan = textstats.unigram_logprob_scores(train, ev) \
-        ._jdf.queryExecution().executedPlan().toString()
+    plan = formatted_plan(textstats.unigram_logprob_scores(train, ev))
     assert "BroadcastHashJoin" in plan, plan
     assert "BroadcastNestedLoopJoin" in plan  # the single-row totals ride-along

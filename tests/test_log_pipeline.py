@@ -6,12 +6,13 @@ at sf0.01), plus targeted semantic invariants from SURVEY.md §2.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.util import assert_df_equals_sql, formatted_plan
+from tests.util import assert_df_equals_sql, formatted_plan, persistent_rdds
 
 import __spark_entry__ as entrymod
 
@@ -188,41 +189,67 @@ def test_failed_checkpoint_write_removes_stage_dir(pages_001, monkeypatch, tmp_p
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     with pytest.raises(OSError, match="simulated"):
         pipeline.build(pages_001)
-    assert written == ["routed", "ops"]  # the routed stage was on disk
+    # the routed stage was on disk, and conn_side is written next to ops
+    assert written[0] == "routed"
+    assert set(written) == {"routed", "ops", "conn_side"}
     assert not list((tmp_path / "tmp").glob("stage-*"))
 
 
 def test_unpersist_releases_stage(spark, pages_001):
-    """unpersist() drops the conn-side localCheckpoint blocks and the stage
-    dir."""
+    """unpersist() removes the stage dir, and build() persists no RDD."""
     from mongo_log_parser_spark.plans import pipeline
 
-    jsc = getattr(spark.sparkContext, "_jsc", None)
-    if jsc is None:
-        pytest.skip("persistent RDD list unavailable")
+    held = persistent_rdds(spark)
     res = pipeline.build(pages_001)
-    res.streams["client_metadata"].count()  # materializes the checkpoint
-    held = set(jsc.getPersistentRDDs().keys())
+    res.streams["client_metadata"].count()
     res.unpersist()
-    assert len(held - set(jsc.getPersistentRDDs().keys())) == 1
+    assert not persistent_rdds(spark) - held
     assert not os.path.exists(res.workdir)
 
 
-def test_meta_auth_shared_scan_equivalence(spark):
-    """client_metadata, auth and conn_lifecycle derive from ONE shared
-    localCheckpointed subset (pipeline.build): rows must equal the direct
-    derivations off the kept checkpoint, and every stream must read the SAME
-    checkpointed RDD — i.e. none triggers its own parquet scan of the routed
-    checkpoint (the old layout scanned it four times: meta + auth through the
-    wide text column, plus the lifecycle start/end pair)."""
-    import re
+def test_driver_stats_write_leaves_no_persisted_rdd(spark, pages_001, tmp_path):
+    """build(), a driver_stats write and unpersist() add no RDD to the
+    persistent RDD list."""
+    from mongo_log_parser_spark.plans import pipeline
 
+    held = persistent_rdds(spark)
+    res = pipeline.build(pages_001)
+    try:
+        res.sinks["driver_stats"].write.parquet(str(tmp_path / "driver_stats"))
+    finally:
+        res.unpersist()
+    assert not persistent_rdds(spark) - held
+
+
+def test_lazy_build_starts_no_job(spark, pages_001):
+    """build(cache=False) only builds plans: no Spark job runs under its job
+    group."""
+    from mongo_log_parser_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    group = "lazy-build-starts-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        pipeline.build(pages_001, cache=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_meta_auth_shared_scan_equivalence(spark):
+    """client_metadata, auth and conn_lifecycle derive from the one conn_side
+    stage (pipeline.build): rows must equal the direct derivations off the
+    kept stream, and every stream must scan only the conn_side stage, never
+    the routed one (read straight from routed, meta and auth would each
+    decompress the wide text column and the lifecycle union scan it twice)."""
     from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
 
     pages = pipeline.read_pages(spark, sf=0.001)
     res = pipeline.build(pages)
     try:
+        conn_side = os.path.join(res.workdir, "conn_side") + os.sep
         for name, fn in (("client_metadata", route.client_metadata_records),
                          ("auth", route.auth_records),
                          ("conn_lifecycle", route.conn_lifecycle_records)):
@@ -230,14 +257,107 @@ def test_meta_auth_shared_scan_equivalence(spark):
             direct = fn(res.streams["kept"])
             assert shared.exceptAll(direct).count() == 0, name
             assert direct.exceptAll(shared).count() == 0, name
-        rdd_ids = set()
-        for name in ("client_metadata", "auth", "conn_lifecycle"):
-            df = res.streams[name]
-            plan = formatted_plan(df)
-            assert "Scan parquet" not in plan, name  # reads the checkpoint RDD
-            ids = set(re.findall(r"MapPartitionsRDD\[(\d+)\]", plan))
-            assert len(ids) == 1, (name, plan[:500])  # even the union's two legs
-            rdd_ids |= ids
-        assert len(rdd_ids) == 1  # ONE shared subset across all three streams
+            files = shared.inputFiles()
+            assert files, name
+            assert all(conn_side in f for f in files), (name, files)
     finally:
         res.unpersist()
+
+
+def _log_line(ts, comp, ctx, msg, attr):
+    return json.dumps({"t": {"$date": ts}, "s": "I", "c": comp, "id": 1, "ctx": ctx,
+                       "msg": msg, "attr": attr}, separators=(",", ":"))
+
+
+def _meta(ts, ctx, version, driver="pymongo", remote="10.0.0.1:5000"):
+    return _log_line(ts, "NETWORK", ctx, "client metadata", {
+        "remote": remote, "negotiatedCompressors": ["zstd", "snappy"],
+        "doc": {"driver": {"name": driver, "version": version},
+                "os": {"type": "Linux", "name": "Ubuntu"}, "platform": "CPython 3.11"}})
+
+
+def _auth(ts, ctx, user):
+    return _log_line(ts, "ACCESS", ctx, "Successfully authenticated",
+                     {"user": user, "db": "admin", "mechanism": "SCRAM-SHA-256"})
+
+
+def _lifetime(url, start, end, cid):
+    return [(url + "s", _log_line(start, "NETWORK", "listener", "Connection accepted",
+                                  {"remote": "10.0.0.1:5000", "connectionId": cid})),
+            (url + "e", _log_line(end, "NETWORK", f"conn{cid}", "Connection ended",
+                                  {"remote": "10.0.0.1:5000"}))]
+
+
+def test_driver_stats_edge_cases_match_oracle(spark, tmp_path):
+    """driver_stats equals the DuckDB oracle on crafted connections: one
+    connection with two metadata lines whose keys differ (its lifetime
+    belongs to the first line by ts then url; a line without ts is never
+    first), connections with metadata but no sampled lifetime, a metadata
+    line with a null conn_id, never-authenticated connections (null username
+    grouped null-safely) and an excluded driver whose lifetime counts
+    nowhere."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mongo_log_parser_spark.contracts import log_oracle
+    from mongo_log_parser_spark.operators import joins, route
+
+    def ts(s):
+        return f"2025-07-01T00:{s}Z"
+
+    rows = [
+        # conn10: two keys at one ts; the 4.6 line is first by url
+        ("u/10b", _meta(ts("00:01.000"), "conn10", "4.7")),
+        ("u/10a", _meta(ts("00:01.000"), "conn10", "4.6")),
+        ("u/10c", _auth(ts("00:02.000"), "conn10", "alice")),
+        *_lifetime("u/10", ts("00:00.000"), ts("00:09.000"), 10),
+        # conn20 has no lifecycle; conn13 has a lifetime outside the sample
+        ("u/20a", _meta(ts("00:03.000"), "conn20", "4.8")),
+        ("u/20b", _auth(ts("00:03.000"), "conn20", "bob")),
+        ("u/13a", _meta(ts("00:04.000"), "conn13", "4.8")),
+        ("u/13b", _auth(ts("00:04.000"), "conn13", "bob")),
+        *_lifetime("u/13", ts("00:00.000"), ts("00:02.000"), 13),
+        # a null conn_id, then two never-authenticated sampled connections
+        ("u/00", _meta(ts("00:06.000"), "listener", "4.6")),
+        ("u/30", _meta(ts("00:06.000"), "conn30", "4.6")),
+        *_lifetime("u/30", ts("00:01.000"), ts("00:05.000"), 30),
+        ("u/40", _meta(ts("00:07.000"), "conn40", "4.6", remote="10.0.0.2:5000")),
+        *_lifetime("u/40", ts("01:00.000"), ts("01:07.001"), 40),
+        # conn60: a line without a timestamp is never a connection's first
+        ("u/60a", _meta(None, "conn60", "4.9")),
+        ("u/60b", _meta(ts("00:09.000"), "conn60", "5.0")),
+        *_lifetime("u/60", ts("00:00.000"), ts("00:03.000"), 60),
+        # an excluded driver keeps its sampled lifetime out of every row
+        ("u/50", _meta(ts("00:08.000"), "conn50", "1.0", driver="NetworkInterfaceTL")),
+        *_lifetime("u/50", ts("00:00.000"), ts("00:30.000"), 50),
+    ]
+    path = str(tmp_path / "pages.parquet")
+    n = len(rows)
+    pq.write_table(pa.table({
+        "url": [u for u, _ in rows],
+        "warc_ts": pa.array([None] * n, pa.timestamp("us", tz="UTC")),
+        "html": pa.array([None] * n, pa.binary()),
+        "text": [t for _, t in rows],
+        "lang": ["en"] * n,
+    }), path)
+
+    s = route.split_streams(spark.read.parquet(path))
+    got = joins.driver_stats(s["client_metadata"], s["auth"], s["conn_lifecycle"])
+    got = got.drop("sample_metadata_line", "sample_auth_line")
+    assert_df_equals_sql(got, duckdb.connect(), log_oracle.q_driver_stats(path), "driver_stats")
+
+    by_key = {(r["version"], r["username"]): r for r in got.collect()}
+    assert set(by_key) == {("4.6", "alice"), ("4.7", "alice"), ("4.8", "bob"), ("4.6", None),
+                           ("4.9", None), ("5.0", None)}
+    assert by_key[("4.9", None)]["sampled_lifetimes"] is None
+    assert by_key[("5.0", None)]["sampled_lifetimes"] == 1
+    assert by_key[("4.6", "alice")]["sampled_lifetimes"] == 1
+    assert by_key[("4.6", "alice")]["max_lifetime_ms"] == 9000
+    assert by_key[("4.7", "alice")]["sampled_lifetimes"] is None
+    assert by_key[("4.8", "bob")]["connection_count"] == 2
+    assert by_key[("4.8", "bob")]["sampled_lifetimes"] is None
+    nulls = by_key[("4.6", None)]
+    assert (nulls["connection_count"], nulls["unique_hosts"]) == (3, 2)
+    assert (nulls["sampled_lifetimes"], nulls["avg_lifetime_ms"], nulls["max_lifetime_ms"]) \
+        == (2, 5500, 7001)

@@ -18,7 +18,7 @@ from mongo_log_parser_spark.contracts.data_oracle import (
     url_parts_sql as _parts_sql,
 )
 from mongo_log_parser_spark.functions import quality, urls
-from tests.util import assert_df_equals_sql
+from tests.util import assert_df_equals_sql, formatted_plan
 
 DOCS = "read_parquet('/root/testdata/sf0.001/documents.parquet')"
 
@@ -60,7 +60,7 @@ def test_repetition_stats_sf0001_vs_oracle(spark, duck):
 
 
 def test_repetition_stats_zero_shuffle(crafted):
-    plan = quality.repetition_stats(crafted)._jdf.queryExecution().executedPlan().toString()
+    plan = formatted_plan(quality.repetition_stats(crafted))
     assert "Exchange" not in plan, f"repetition_stats must be shuffle-free:\n{plan}"
 
 
@@ -178,7 +178,7 @@ SELECT norm_url, url AS kept_url, n AS n_versions FROM r WHERE rn = 1
 def test_filter_blocked_domains_broadcast_and_parity(spark, crafted_urls, duck):
     blocked = urls.blocked_domains_df(spark, ["example.com", "site.io"])
     got = urls.filter_blocked_domains(crafted_urls.select("url"), blocked)
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = formatted_plan(got)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     sql = f"""
 WITH p AS ({_parts_sql('crafted_urls')})

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from mongo_log_parser_spark import job
 from mongo_log_parser_spark.sinks import writers
 from mongo_log_parser_spark.sources import datagen
-from tests.util import formatted_plan
+from tests.util import formatted_plan, persistent_rdds
 
 # report.json sections with no row bound, by the sink they render
 UNBOUNDED_SECTIONS = {
@@ -88,9 +88,11 @@ def test_empty_sink_round_trips(spark, tmp_path):
 
 
 def test_failed_writer_releases_stage_dir(spark, tmp_path, monkeypatch):
-    """A writer that raises still releases the stage dir and the conn-side
-    checkpoint."""
+    """A writer that raises still releases the stage dir, and the run leaves
+    no persisted RDD."""
     from mongo_log_parser_spark.plans import pipeline
+
+    held = persistent_rdds(spark)
 
     pages = datagen.ensure_pages(0.001)
     monkeypatch.setattr(datagen, "DATA_ROOT", str(tmp_path / "data"))
@@ -110,8 +112,9 @@ def test_failed_writer_releases_stage_dir(spark, tmp_path, monkeypatch):
         ["--pages", pages, "--out", str(tmp_path / "out"), "--json-only", "--drivers"])
     with pytest.raises(OSError, match="simulated"):
         job.run_job(spark, args)
-    assert len(built) == 1 and built[0].conn_side is None
+    assert len(built) == 1
     assert not list((tmp_path / "data" / "tmp").glob("stage-*"))
+    assert not persistent_rdds(spark) - held
 
 
 def _small_sinks(spark, n: int) -> dict:

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from mongo_log_parser_spark.sinks import writers
 from mongo_log_parser_spark.sources import datagen, logfiles
+from tests.util import formatted_plan
 
 
 def _write_log_files(tmp: str, spark) -> list[str]:
@@ -36,7 +37,7 @@ def test_read_log_files_plain_and_gzip(spark):
         df = logfiles.read_log_files(spark, paths)
         # no per-file row_number window unless --limit is set: the no-limit
         # scan must be shuffle-free (scale: one reducer per file otherwise)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = formatted_plan(df)
         assert "Exchange" not in plan and "Window" not in plan
         assert df.count() == 400  # .gz read transparently (S2)
         assert df.select("url").distinct().count() == 400  # lineage ids unique
@@ -367,7 +368,7 @@ def test_per_shard_rollup(spark):
 
         assert _key(grouped.collect()) == _key(shard_main.collect())
         # and the grouped plan must be a single aggregation, not N union branches
-        plan = grouped._jdf.queryExecution().executedPlan().toString()
+        plan = formatted_plan(grouped)
         assert "Union" not in plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -52,3 +52,13 @@ def formatted_plan(df) -> str:
     if "Physical Plan" not in plan:
         pytest.skip("formatted plan text unavailable")
     return plan
+
+
+def persistent_rdds(spark) -> set:
+    """Ids of the RDDs the context holds persisted; skips the test when this
+    PySpark build has no JVM context. Compare id sets, not sizes: the context
+    cleaner may release an earlier test's RDD meanwhile."""
+    jsc = getattr(spark.sparkContext, "_jsc", None)
+    if jsc is None:
+        pytest.skip("persistent RDD list unavailable")
+    return set(jsc.getPersistentRDDs().keys())
