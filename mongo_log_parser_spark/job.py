@@ -82,8 +82,9 @@ def run_job(spark, args) -> dict:
         pages = logfiles.read_log_files(spark, args.logs, limit_per_file=args.limit)
         pages_path = None
     else:
-        pages_path = args.pages or datagen.ensure_pages(args.sf if args.sf is not None else 0.001)
-        pages = spark.read.parquet(pages_path)
+        # pipeline.build reads the path: a cold session's first read is build time
+        pages = pages_path = args.pages or datagen.ensure_pages(
+            args.sf if args.sf is not None else 0.001)
 
     if args.resumable and pages_path:
         stats = manifest.run_resumable(spark, pages_path, os.path.join(args.out, "ingest"))
@@ -147,6 +148,7 @@ def run_job(spark, args) -> dict:
             sinks = writers.redact_sinks(sinks)
 
         os.makedirs(args.out, exist_ok=True)
+        report = None  # the first report writer builds it, the JSON writer reuses it
         if not args.json_only:
             # every sink is computed once, here; the writers below read it back
             # from parquet. --json-only keeps the live plans: it reads them once
@@ -163,14 +165,14 @@ def run_job(spark, args) -> dict:
                         sink, sinks[sink],
                         flag if os.path.isabs(flag) else os.path.join(args.out, flag))
             if args.html:
-                writers.write_html_report(
+                report = writers.write_html_report(
                     sinks,
                     args.html if os.path.isabs(args.html) else os.path.join(args.out, args.html),
                     top_sections=args.top_sections)
         writers.write_json_report(
             sinks, os.path.join(args.out, "report.json"),
             metadata={"pages": pages_path or "log-files", "engine": "mongo_log_parser_spark"},
-            top_sections=args.top_sections,
+            top_sections=args.top_sections, report=report,
         )
         if args.text:
             writers.console_report(sinks)

@@ -53,8 +53,7 @@ def derive_streams(routed: DataFrame, ops: DataFrame | None = None,
     conn_side = kept if conn_side is None else conn_side
     return {
         "ignored": routed.filter(F.col("is_ignored")).select(
-            *[c for c in ("url", "warc_ts", "lang", "text", "shard", "node")
-              if c in routed.columns],
+            *_present(routed, "url", "warc_ts", "lang", "text", "shard", "node"),
             # ignored_category() always resolves (its CASE has an otherwise),
             # so this coalesce never fires — it only pins the non-null type,
             # which the flag's CASE WHEN and the parquet round-trip erase.
@@ -71,6 +70,13 @@ def derive_streams(routed: DataFrame, ops: DataFrame | None = None,
     }
 
 
+def _present(df: DataFrame, *cols: str) -> list[str]:
+    """The given columns that `df` has. Page columns pass through the parse
+    only when the pages frame has them (parse._PASSTHROUGH), so a stream
+    keeps each one only if present."""
+    return [c for c in cols if c in df.columns]
+
+
 def kept_rows(routed: DataFrame) -> DataFrame:
     """The parsed lines of a routed frame that enter the main pipeline."""
     return routed.filter(~F.col("is_ignored")).drop(*ROUTE_FLAG_COLS)
@@ -80,11 +86,10 @@ def ttl_pre_records(ttl_parsed: DataFrame) -> DataFrame:
     """TTL pre-pass (processTtlOperation, LogParser.java:938-970) over
     already-parsed TTL lines: require attr.namespace, namespace filter, take
     numDeleted/durationMillis."""
-    shard_cols = [c for c in ("shard", "node") if c in ttl_parsed.columns]
     return (
         ttl_parsed.filter(F.col("a_namespace").isNotNull())
         .select(
-            "url", "warc_ts", "lang", "ts_str", "text", *shard_cols,
+            *_present(ttl_parsed, "url", "warc_ts", "lang", "ts_str", "text", "shard", "node"),
             F.col("a_namespace").alias("ns"),
             F.col("a_num_deleted").alias("num_deleted"),
             F.col("a_duration_ms").alias("duration_ms"),

@@ -101,11 +101,16 @@ def _staged_streams(pages: DataFrame, workdir: str,
 
 
 def build(
-    pages: DataFrame,
+    pages: DataFrame | str,
     cache: bool = True,
     workdir: str | None = None,
     ignore_patterns: list[str] | None = None,
 ) -> PipelineResult:
+    """Stage (or, with cache=False, lazily view) the routed streams of
+    `pages`, a pages frame or the path of a pages parquet table, and plan
+    every report sink over them."""
+    if isinstance(pages, str):
+        pages = read_pages(SparkSession.active(), path=pages)
     if cache:
         own_workdir = workdir is None
         workdir = workdir or os.path.join(

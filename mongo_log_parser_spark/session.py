@@ -87,6 +87,11 @@ def build_session(
         .config("spark.sql.parquet.compression.codec",
                 os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark wraps every Column method to record its Python call site:
+        # a conf read plus two JVM calls each, about half the py4j round
+        # trips of building the pipeline's plans. Off, DataFrame errors lose
+        # the Python call site from their context. Read once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )

@@ -3,8 +3,12 @@
 Each sink is computed once: `write_parquet_sinks` writes every sink
 concurrently and returns the written parquet read back, and the CSV, HTML,
 JSON and console writers read those scans instead of re-running the sink
-plans (the reference likewise renders every format from one in-memory state,
-JsonReportGenerator.java:29-89).
+plans. The HTML and JSON reports render one report dict (`json_report`),
+built once from one Arrow snapshot per sink it reads: the first report
+writer builds it and returns it, the second is passed it. Its A12 summaries
+stay Spark aggregations over the full sinks, run once. The reference
+likewise renders every format from one in-memory state
+(JsonReportGenerator.java:29-89).
 
 - CSV sinks: one file per accumulator, rows sorted by count desc — the
   reference's reportCsv pattern (Accumulator.java:169-177 and the per-
@@ -24,8 +28,11 @@ from __future__ import annotations
 import json
 import os
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,6 +53,24 @@ def _sorted(name: str, df: DataFrame) -> DataFrame:
         return df.orderBy(F.desc("planning_us"), F.asc("url"))
     key = SINK_SORT_KEYS.get(name)
     return df.orderBy(F.desc(key)) if key and key in df.columns else df
+
+
+def _sort_table(name: str, table: pa.Table) -> pa.Table:
+    """_sorted's order applied to an Arrow table. sort_indices is stable, so
+    ties keep read order, as they do in Spark's sort of the same scan."""
+    if name == "slow_planning":
+        # Spark's asc puts nulls first and its desc puts them last, but
+        # pyarrow places nulls once per sort, so a null url sorts first
+        # through its own validity key
+        keyed = table.append_column("_url_valid", pc.is_valid(table["url"]))
+        keys = [("planning_us", "descending"), ("_url_valid", "ascending"),
+                ("url", "ascending")]
+        return table.take(pc.sort_indices(keyed, sort_keys=keys, null_placement="at_end"))
+    key = SINK_SORT_KEYS.get(name)
+    if not (key and key in table.column_names):
+        return table
+    return table.take(pc.sort_indices(table, sort_keys=[(key, "descending")],
+                                      null_placement="at_end"))
 
 
 def write_csv_sinks(sinks: dict[str, DataFrame], out_dir: str) -> None:
@@ -131,10 +156,57 @@ def console_report(sinks: dict[str, DataFrame], n: int = 20) -> None:
         _sorted(name, df).show(n, truncate=80)
 
 
+# report.json sections in document order, with the sink each renders
+REPORT_SECTIONS = (
+    ("mainOperations", "main_ops"), ("ttlOperations", "ttl_ops"),
+    ("operationTypeStats", "op_stats"), ("errorCodes", "error_codes"),
+    ("queryHashAnalysis", "query_hash"), ("planCacheAnalysis", "plan_cache"),
+    ("indexStats", "index_stats"), ("transactions", "transactions"),
+    ("slowPlanning", "slow_planning"), ("appNameConnections", "app_conn_stats"),
+    ("driverStats", "driver_stats"), ("ignoredCategories", "ignored"),
+)
+
+# A12 global summaries: sums over the full rollups, reproducing the
+# reference's lossy Σ avg*count totalDocsExamined
+# (JsonReportGenerator.java:96-106)
+_SUMMARY_SUMS = {
+    "main_ops": ("sum(`count`)", "sum(avg_docs * `count`)", "sum(total_returned)"),
+    "error_codes": ("sum(`count`)",),
+    "index_stats": ("sum(`count`) FILTER (WHERE is_collscan)",),
+}
+
+
+def _totals(sinks: dict[str, DataFrame], names: list[str]) -> dict[str, list[int]]:
+    """Each named sink's [row count, *its _SUMMARY_SUMS], nulls as 0 and
+    padded with 0 to four values, from ONE Spark job: each sink aggregates
+    within one partition, where a global aggregate needs no shuffle stage,
+    and the one-row results are unioned. So one task reads each sink; on a
+    live sink plan (--json-only) that task also runs the plan's last stage."""
+    if not names:
+        return {}
+    parts = []
+    for name in names:
+        exprs = ("count(1)", *_SUMMARY_SUMS.get(name, ()))
+        exprs += ("0",) * (4 - len(exprs))
+        parts.append(sinks[name].coalesce(1).agg(
+            F.lit(name).alias("sink"),
+            *[F.coalesce(F.expr(e), F.lit(0)).cast("long").alias(f"v{i}")
+              for i, e in enumerate(exprs)]))
+    return {r["sink"]: list(r)[1:] for r in reduce(lambda a, b: a.union(b), parts).collect()}
+
+
 def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
-                top_query_hashes: int = 100, top_slow_planning: int = 50,
+                top_query_hashes: int | None = 100, top_slow_planning: int | None = 50,
                 top_sections: int | None = None) -> dict[str, Any]:
     """K3/A12 — the nested JSON report document (JsonReportGenerator.java:29-89).
+
+    Every section comes from one snapshot of its sink: a section with no row
+    bound takes its sink into the driver once as Arrow (`toArrow()`) and
+    sorts it there (`_sort_table`); a bounded section keeps the Spark-side
+    cut `_sorted(...).limit(k)`, so ties at the bound resolve as Spark
+    resolves them. The summaries and the row counts of the bounded sections'
+    sinks come from one more Spark job (`_totals`). Sinks no section reads
+    are never touched.
 
     Section bounds match the reference: ONLY queryHashAnalysis is top-100
     (JsonReportGenerator.java:251) and slowPlanning top-50; every other
@@ -146,63 +218,38 @@ def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
     consumers can detect it. The A12 global summaries are always computed as
     Spark aggregations over the FULL sinks, not from the collected rows, so
     the summary totals stay exact regardless of any cap."""
+    bounds = {name: top_sections for _, name in REPORT_SECTIONS}
+    bounds.update(op_stats=None, ignored=None, query_hash=top_query_hashes,
+                  slow_planning=top_slow_planning)
+    totals = _totals(sinks, [name for _, name in REPORT_SECTIONS if name in sinks
+                             and (bounds[name] or name in _SUMMARY_SUMS)])
     truncation: dict[str, dict[str, int]] = {}
 
-    def rows(name, section=None, limit=None):
+    def rows(section: str, name: str) -> list[dict[str, Any]]:
         if name not in sinks:  # opt-out sinks (--drivers / --app-name-stats off)
             return []
-        df = _sorted(name, sinks[name])
-        if limit:
-            df = df.limit(limit)
-        out = [r.asDict(recursive=True) for r in df.collect()]
-        if limit and section and len(out) == limit:
-            total = sinks[name].count()
-            if total > limit:
-                truncation[section] = {"total": total, "kept": limit}
-        return out
+        limit = bounds[name]
+        if not limit:
+            return _sort_table(name, sinks[name].toArrow()).to_pylist()
+        if totals[name][0] > limit:
+            truncation[section] = {"total": totals[name][0], "kept": limit}
+        return [r.asDict(recursive=True)
+                for r in _sorted(name, sinks[name]).limit(limit).collect()]
 
-    # A12 global summaries — distributed aggregation over the full rollups,
-    # reproducing the reference's lossy Σ avg*count totals
-    total_ops = total_docs_lossy = total_returned = unique_patterns = 0
-    if "main_ops" in sinks:
-        s = sinks["main_ops"].agg(
-            F.coalesce(F.sum("count"), F.lit(0)).alias("ops"),
-            F.coalesce(F.sum(F.col("avg_docs") * F.col("count")), F.lit(0)).alias("docs"),
-            F.coalesce(F.sum("total_returned"), F.lit(0)).alias("ret"),
-            F.count(F.lit(1)).alias("patterns"),
-        ).collect()[0]
-        total_ops, total_docs_lossy = s["ops"], s["docs"]
-        total_returned, unique_patterns = s["ret"], s["patterns"]
-    total_errors = 0
-    if "error_codes" in sinks:
-        total_errors = sinks["error_codes"].agg(
-            F.coalesce(F.sum("count"), F.lit(0))).collect()[0][0]
-    collscan_ops = 0
-    if "index_stats" in sinks:
-        collscan_ops = sinks["index_stats"].filter("is_collscan").agg(
-            F.coalesce(F.sum("count"), F.lit(0))).collect()[0][0]
+    patterns, total_ops, total_docs_lossy, total_returned = totals.get("main_ops", [0] * 4)
+    total_errors = totals.get("error_codes", [0] * 4)[1]
+    collscan_ops = totals.get("index_stats", [0] * 4)[1]
     report = {
         "metadata": metadata or {},
         "summary": {
             "totalOperations": total_ops,
             "totalDocsExamined": total_docs_lossy,  # Σ avg*count, by reference design
             "totalReturned": total_returned,
-            "uniquePatterns": unique_patterns,
+            "uniquePatterns": patterns,
             "totalErrors": total_errors,
             "collscanPercent": round(100.0 * collscan_ops / total_ops, 2) if total_ops else 0.0,
         },
-        "mainOperations": rows("main_ops", "mainOperations", limit=top_sections),
-        "ttlOperations": rows("ttl_ops", "ttlOperations", limit=top_sections),
-        "operationTypeStats": rows("op_stats"),
-        "errorCodes": rows("error_codes", "errorCodes", limit=top_sections),
-        "queryHashAnalysis": rows("query_hash", "queryHashAnalysis", limit=top_query_hashes),
-        "planCacheAnalysis": rows("plan_cache", "planCacheAnalysis", limit=top_sections),
-        "indexStats": rows("index_stats", "indexStats", limit=top_sections),
-        "transactions": rows("transactions", "transactions", limit=top_sections),
-        "slowPlanning": rows("slow_planning", "slowPlanning", limit=top_slow_planning),
-        "appNameConnections": rows("app_conn_stats", "appNameConnections", limit=top_sections),
-        "driverStats": rows("driver_stats", "driverStats", limit=top_sections),
-        "ignoredCategories": rows("ignored"),
+        **{section: rows(section, name) for section, name in REPORT_SECTIONS},
     }
     if truncation:
         report["sectionTruncation"] = truncation
@@ -210,10 +257,16 @@ def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
 
 
 def write_json_report(sinks: dict[str, DataFrame], path: str, metadata: dict | None = None,
-                      top_sections: int | None = None) -> None:
+                      top_sections: int | None = None,
+                      report: dict[str, Any] | None = None) -> dict[str, Any]:
+    """Write report.json with `metadata`. `report` is a json_report dict an
+    earlier report writer built, so no sink is read again; without it the
+    report is built here. Returns the report for the next writer."""
+    if report is None:
+        report = json_report(sinks, top_sections=top_sections)
     with open(path, "w") as f:
-        json.dump(json_report(sinks, metadata, top_sections=top_sections),
-                  f, indent=2, default=str)
+        json.dump({**report, "metadata": metadata or {}}, f, indent=2, default=str)
+    return report
 
 
 # ----------------------------------------------------------- K4 HTML report
@@ -421,10 +474,15 @@ def html_report(report: dict[str, Any], shard_rows: dict[str, list[dict]] | None
 
 def write_html_report(sinks: dict[str, DataFrame], path: str,
                       metadata: dict | None = None,
-                      top_sections: int | None = None) -> None:
+                      top_sections: int | None = None,
+                      report: dict[str, Any] | None = None) -> dict[str, Any]:
+    """Write the HTML report with `metadata`; `report` as in write_json_report."""
+    if report is None:
+        report = json_report(sinks, top_sections=top_sections)
     with open(path, "w") as f:
-        f.write(html_report(json_report(sinks, metadata, top_sections=top_sections),
+        f.write(html_report({**report, "metadata": metadata or {}},
                             shard_rows=shard_report_rows(sinks, top=top_sections)))
+    return report
 
 
 # ------------------------------------------------------- E18-E20 utilities

@@ -106,6 +106,33 @@ def test_ttl_line_feeds_both_ttl_and_ignored(streams_001):
     assert ttl > 0 and ignored_ttl > 0
 
 
+def test_pages_without_warc_ts_route(spark, pages_001, tmp_path):
+    """warc_ts is an optional page column: a url/lang/text pages table builds
+    split_streams, and its ttl_pre rows equal those of the same lines with
+    warc_ts, less that column."""
+    from mongo_log_parser_spark.operators import route
+
+    lines = pages_001.filter(F.col("text").contains("TTL") | F.col("url").endswith("0"))
+    lines.write.parquet(str(tmp_path / "full"))
+    lines.select("url", "lang", "text").write.parquet(str(tmp_path / "bare"))
+    full = route.split_streams(spark.read.parquet(str(tmp_path / "full")))
+    bare = route.split_streams(spark.read.parquet(str(tmp_path / "bare")))
+    want = full["ttl_pre"].drop("warc_ts")
+    got = bare["ttl_pre"]
+    assert got.columns == want.columns
+    assert want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert bare["ignored"].count() == full["ignored"].count()
+
+
+def test_session_drops_call_site_capture(spark):
+    """build_session turns off PySpark's per-Column call-site capture."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
 def test_integer_avg_is_floor_division(spark):
     from mongo_log_parser_spark.operators.aggregates import main_ops
     from mongo_log_parser_spark.operators.route import split_streams

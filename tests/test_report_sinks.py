@@ -1,11 +1,11 @@
 """The report writers read every sink back from its written parquet: each sink
 plan runs once, in `writers.write_parquet_sinks`, whose writes run
-concurrently under the caller's job group."""
+concurrently under the caller's job group. The HTML and JSON reports render
+one report dict, built from one Arrow snapshot per sink."""
 
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from mongo_log_parser_spark import job
 from mongo_log_parser_spark.sinks import writers
 from mongo_log_parser_spark.sources import datagen
-from tests.util import formatted_plan, persistent_rdds
+from tests.util import persistent_rdds
 
 # report.json sections with no row bound, by the sink they render
 UNBOUNDED_SECTIONS = {
@@ -39,39 +39,65 @@ def _multiset(rows) -> list[str]:
 
 
 def test_report_writers_read_written_sinks(spark, tmp_path, monkeypatch):
-    """Every frame reaching the HTML and JSON writers is a bare parquet scan of
-    out/sinks/<name>, and each unbounded report.json section equals its
-    written sink as a row multiset."""
-    seen: dict[str, dict] = {}
+    """The HTML and JSON writers together start at most one Spark job per
+    sink they read, plus four, and each unbounded report.json section equals
+    its written sink as a row multiset."""
+    sc = spark.sparkContext
+    group = "report-writers"
+    ran = []
     for fn in ("write_html_report", "write_json_report"):
         real = getattr(writers, fn)
 
-        def capture(sinks, *args, _fn=fn, _real=real, **kwargs):
-            seen[_fn] = dict(sinks)
-            return _real(sinks, *args, **kwargs)
+        def grouped(*args, _fn=fn, _real=real, **kwargs):
+            ran.append(_fn)
+            sc.setJobGroup(group, group)
+            try:
+                return _real(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
 
-        monkeypatch.setattr(writers, fn, capture)
+        monkeypatch.setattr(writers, fn, grouped)
 
     out = tmp_path / "out"
     summary = _run_job(spark, out, "--drivers", "--app-name-stats")
-    assert set(seen) == {"write_html_report", "write_json_report"}
-    for fn, sinks in seen.items():
-        assert sorted(sinks) == summary["sinks"]
-        for name, df in sinks.items():
-            sink_dir = os.path.realpath(out / "sinks" / name)
-            files = df.inputFiles()
-            assert files, (fn, name)
-            assert all(os.path.dirname(os.path.realpath(f.removeprefix("file:"))) == sink_dir
-                       for f in files), (fn, name, files)
-            plan = formatted_plan(df)
-            assert "Scan parquet" in plan, (fn, name)
-            assert "Exchange" not in plan and "HashAggregate" not in plan, (fn, name)
+    assert ran == ["write_html_report", "write_json_report"]
+    sinks_read = [name for name in summary["sinks"] if name != "ignored_sample"]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= len(sinks_read) + 4, len(jobs)
 
     report = json.load(open(out / "report.json"))
     for section, name in UNBOUNDED_SECTIONS.items():
         written = spark.read.parquet(str(out / "sinks" / name)).collect()
         assert _multiset(report[section]) == _multiset(
             r.asDict(recursive=True) for r in written), section
+
+
+def test_top_sections_cut_in_spark(spark, tmp_path):
+    """--top-sections 5 keeps, per capped section, the first 5 rows of
+    Spark's sort of the written sink and discloses the sink's full size;
+    the uncapped sections keep every row."""
+    out = tmp_path / "out"
+    _run_job(spark, out, "--top-sections", "5", "--drivers", "--app-name-stats")
+    report = json.load(open(out / "report.json"))
+    capped = {section: name for section, name in UNBOUNDED_SECTIONS.items()
+              if section not in ("operationTypeStats", "ignoredCategories")}
+    bounds = {**dict.fromkeys(capped, 5), "queryHashAnalysis": 100, "slowPlanning": 50}
+    truncation = {}
+    for section, name in {**capped, "queryHashAnalysis": "query_hash",
+                          "slowPlanning": "slow_planning"}.items():
+        df = spark.read.parquet(str(out / "sinks" / name))
+        k = bounds[section]
+        expected = [r.asDict(recursive=True)
+                    for r in writers._sorted(name, df).limit(k).collect()]
+        assert report[section] == json.loads(json.dumps(expected, default=str)), section
+        if df.count() > k:
+            truncation[section] = {"total": df.count(), "kept": k}
+    assert truncation and report["sectionTruncation"] == truncation
+    for section in ("operationTypeStats", "ignoredCategories"):
+        name = UNBOUNDED_SECTIONS[section]
+        assert len(report[section]) == spark.read.parquet(str(out / "sinks" / name)).count()
+    assert "showing top 5 of" in (out / "report.html").read_text()
 
 
 def test_empty_sink_round_trips(spark, tmp_path):
@@ -156,6 +182,31 @@ def test_failed_sink_write_raises_after_other_writes(spark, tmp_path):
     for name in sinks:
         if name != "bad":
             assert (out / name / "_SUCCESS").exists(), name
+
+
+def test_sections_keep_spark_sort_order(spark, tmp_path):
+    """Every section sorted from its Arrow snapshot lists its rows in the
+    order Spark's sort of the same single-file sink gives: key desc with
+    nulls last and ties in read order; slowPlanning by planning_us desc
+    (nulls last), then url asc (nulls first)."""
+    rows = [("a", 3), ("b", None), ("c", 5), ("d", 3), ("e", None), ("f", 5),
+            ("g", 1), ("h", 3)]
+    base = spark.createDataFrame(rows, "name string, k long").coalesce(1)
+    crafted = {name: base.withColumnRenamed("k", key).withColumns({
+                   "avg_docs": F.lit(1), "total_returned": F.lit(2),
+                   "is_collscan": F.col("name") < "d"})
+               for name, key in writers.SINK_SORT_KEYS.items()}
+    slow = [("b", 3), (None, 3), ("a", 3), ("c", None), (None, 7), ("a", 7), ("a", 3)]
+    crafted["slow_planning"] = spark.createDataFrame(
+        slow, "url string, planning_us long").coalesce(1)
+    sinks = writers.write_parquet_sinks(crafted, str(tmp_path / "sinks"))
+    report = writers.json_report(sinks, top_query_hashes=None, top_slow_planning=None)
+    for section, name in writers.REPORT_SECTIONS:
+        expected = [r.asDict(recursive=True)
+                    for r in writers._sorted(name, sinks[name]).collect()]
+        assert report[section] == expected, section
+    assert [r["name"] for r in report["mainOperations"]] == list("cfadhgbe")
+    assert [r["url"] for r in report["slowPlanning"]] == [None, "a", None, "a", "a", "b", "c"]
 
 
 def test_slow_planning_section_ordered_by_sink_key(spark):
