@@ -86,40 +86,30 @@ def run_job(spark, args) -> dict:
         pages = pages_path = args.pages or datagen.ensure_pages(
             args.sf if args.sf is not None else 0.001)
 
-    if args.resumable and pages_path:
-        stats = manifest.run_resumable(spark, pages_path, os.path.join(args.out, "ingest"))
-        print(json.dumps({"manifest": stats}))
-
     ignore_patterns = (
         prefilter.load_filter_config(args.filter_config) if args.filter_config else None
     )
+    if args.resumable and pages_path:
+        stats = manifest.run_resumable(spark, pages_path, os.path.join(args.out, "ingest"),
+                                       ignore_patterns=ignore_patterns)
+        print(json.dumps({"manifest": stats}))
+
     res = pipeline.build(pages, ignore_patterns=ignore_patterns)
     try:
         ops = res.streams["ops"]
         if args.ns_filter:
             # The reference applies user namespace filters inside dispatch
             # (matchesNamespaceFilter, LogParserTask.java:361-408), gating every
-            # ns-scoped analysis — so AND the predicate into ns_pass and rebuild
-            # ALL ops-based sinks from the same filtered stream (globals and
-            # --shards copies therefore agree: a shard rollup sums to its global).
-            from .operators import aggregates as agg
-
+            # ns-scoped analysis — so AND the predicate into ns_pass and re-plan
+            # the sinks over the filtered ops/ttl_pre (globals and --shards
+            # copies therefore agree: a shard rollup sums to its global).
             pred = logfiles.namespace_filter_predicate(args.ns_filter)
             ops = ops.withColumn(
                 "ns_pass", F.col("ns_pass") & pred(F.col("db"), F.col("coll")))
             res.streams["ops"] = ops
             res.streams["ttl_pre"] = res.streams["ttl_pre"].filter(
                 pred(F.col("db"), F.col("coll")))
-            res.sinks.update({
-                "main_ops": agg.main_ops(ops),
-                "ttl_ops": agg.ttl_ops(res.streams["ttl_pre"]),
-                "op_stats": agg.op_stats(ops),
-                "query_hash": agg.query_hash(ops),
-                "plan_cache": agg.plan_cache(ops),
-                "index_stats": agg.index_stats(ops),
-                "slow_planning": agg.slow_planning(ops),
-                "app_conn_stats": agg.app_conn_stats(ops),
-            })
+            res.sinks = pipeline.plan_sinks(res.streams)
 
         # reference defaults: driver stats and appName stats are opt-in
         sinks = dict(res.sinks)

@@ -13,10 +13,15 @@ Splits the pages stream into the reference's routed sub-streams:
   ops         dispatched main-operation rows (extract.extract_ops)
 
 There is one router, routed_parse(): it routes and parses every bounded line
-in one scan. derive_streams() splits its output into the streams above.
-split_streams() applies it to the lazy routed frame; pipeline.build applies
-it to the frame read back from the routed parquet stage, together with its
-ops and conn_side stages.
+in one scan, evaluating each routing predicate once, and every caller reads
+its flags. Its callers:
+- pipeline.build writes it as the routed parquet stage and derives the
+  streams above from the read-back (derive_streams), together with its ops
+  and conn_side stages;
+- split_streams() derives them from the lazy routed frame (the oracle gate,
+  streaming, build(cache=False));
+- manifest.run_resumable writes kept_rows() of it per day, and takes its
+  ignored/kept counters from the is_ignored flag.
 """
 
 from __future__ import annotations

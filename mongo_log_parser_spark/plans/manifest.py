@@ -9,7 +9,12 @@ NO rename-based atomicity anywhere; on a real deployment the same structure
 maps 1:1 to an Iceberg table with `days(warc_ts)` hidden partitioning, where
 the manifest row is the snapshot commit):
 
-- the ingest unit is one `day(warc_ts)` partition of the pages table;
+- the ingest unit is one `day(warc_ts)` partition of the pages table,
+  routed by the one router exactly as pipeline.build routes it: kept is
+  route.kept_rows(route.routed_parse(day)) and ops is route.extract_ops over
+  the written kept. The manifest counters are observe() metrics on the
+  write jobs: rows_in/oversized over the day's pages, ignored/kept over the
+  router's is_ignored flag, ops over the ops write;
 - each attempt writes its routed outputs to a UNIQUE content-addressed
   location out_dir/{kept,ops}/day=<d>/attempt=<run_id>/ with plain writes —
   nothing is ever renamed or replaced, so the scheme is safe on object
@@ -39,7 +44,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import prefilter
@@ -129,9 +134,13 @@ def _append_manifest_row(spark: SparkSession, out_dir: str, row: dict) -> None:
 
 
 def run_resumable(spark: SparkSession, pages_path: str, out_dir: str,
-                  fail_after_days: int | None = None) -> dict:
+                  fail_after_days: int | None = None,
+                  ignore_patterns: list[str] | None = None) -> dict:
     """Process all not-yet-committed day partitions; returns run stats.
 
+    Each day is routed as pipeline.build routes it:
+    route.kept_rows(route.routed_parse(day_pages)), with `ignore_patterns`
+    (the --config FilterConfig list) passed to the router.
     fail_after_days simulates a mid-run crash (for resumability tests)."""
     run_id = uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
@@ -143,42 +152,40 @@ def run_resumable(spark: SparkSession, pages_path: str, out_dir: str,
     todo = [d for d in all_days if d not in done]
 
     processed = []
+    text, ignored = F.col("text"), F.col("is_ignored")
     for i, day in enumerate(todo):
         if fail_after_days is not None and i >= fail_after_days:
             break
         # day-partition pruning: the filter reaches the scan (partition values
         # derive from warc_ts min/max per row group → parquet stats pruning)
         day_pages = pages.filter(F.col("day") == day).drop("day")
-        # route/parse counters ride the WRITE jobs as observe() metrics — the
-        # commit is exactly 2 jobs per partition (kept write incl. the one
-        # Arrow parse, then ops write off the committed kept), with no
-        # separate count re-reads.
-        from pyspark.sql import Observation
-
-        text = F.col("text")
-        obs_in, obs_kept, obs_ops = Observation(), Observation(), Observation()
+        # the counters ride the WRITE jobs as observe() metrics, so the commit
+        # is exactly 2 jobs per partition (kept write incl. the one Arrow
+        # parse, then ops write off the committed kept) with no count
+        # re-reads: rows_in/oversized over the day's pages; ignored/kept over
+        # the router's own is_ignored flag, so no predicate runs twice
+        obs_in, obs_route, obs_ops = Observation(), Observation(), Observation()
         observed = day_pages.observe(
             obs_in,
             F.count(F.lit(1)).alias("rows_in"),
             F.sum(prefilter.is_oversized(text).cast("long")).alias("oversized"),
-            F.sum((~prefilter.is_oversized(text) & prefilter.should_ignore(text)).cast("long")).alias("ignored"),
         )
-        streams = route.split_streams(observed)
+        routed = route.routed_parse(observed, ignore_patterns=ignore_patterns).observe(
+            obs_route, F.count_if(ignored).alias("ignored"), F.count_if(~ignored).alias("kept"))
         kept_dir = _attempt_dir(out_dir, "kept", day, run_id)
         ops_dir = _attempt_dir(out_dir, "ops", day, run_id)
-        streams["kept"].observe(obs_kept, F.count(F.lit(1)).alias("kept")) \
-            .write.mode("overwrite").parquet(kept_dir)
+        route.kept_rows(routed).write.mode("overwrite").parquet(kept_dir)
         ops = route.extract_ops(spark.read.parquet(kept_dir))  # no re-parse
         ops.observe(obs_ops, F.count(F.lit(1)).alias("ops")) \
             .write.mode("overwrite").parquet(ops_dir)
-        c_in, kept_n, ops_n = obs_in.get, obs_kept.get, obs_ops.get
+        c_in, c_route, c_ops = obs_in.get, obs_route.get, obs_ops.get
         # THE COMMIT: the manifest row (pointing at this attempt's paths).
         # A crash anywhere above leaves only unreferenced orphan dirs.
         _append_manifest_row(spark, out_dir, {
             "day": day, "lineage_id": run_id,
             "kept_path": kept_dir, "ops_path": ops_dir,
             "rows_in": c_in["rows_in"], "oversized": c_in["oversized"],
-            "ignored": c_in["ignored"], "kept": kept_n["kept"], "ops": ops_n["ops"],
+            "ignored": c_route["ignored"], "kept": c_route["kept"], "ops": c_ops["ops"],
         })
         processed.append(day)
 

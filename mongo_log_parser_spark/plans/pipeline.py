@@ -100,32 +100,12 @@ def _staged_streams(pages: DataFrame, workdir: str,
     }
 
 
-def build(
-    pages: DataFrame | str,
-    cache: bool = True,
-    workdir: str | None = None,
-    ignore_patterns: list[str] | None = None,
-) -> PipelineResult:
-    """Stage (or, with cache=False, lazily view) the routed streams of
-    `pages`, a pages frame or the path of a pages parquet table, and plan
-    every report sink over them."""
-    if isinstance(pages, str):
-        pages = read_pages(SparkSession.active(), path=pages)
-    if cache:
-        own_workdir = workdir is None
-        workdir = workdir or os.path.join(
-            datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}"
-        )
-        try:
-            streams = _staged_streams(pages, workdir, ignore_patterns)
-        except BaseException:
-            if own_workdir:
-                _remove_dir(workdir)
-            raise
-    else:
-        streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
-
-    sinks = {
+def plan_sinks(streams: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The 13 report sinks over `streams`: the one place that pairs each
+    sink builder with the stream it reads. Builders are called through their
+    module (agg.main_ops, ...), never bound at import, so wrapping a module
+    attribute reaches every call."""
+    return {
         "main_ops": agg.main_ops(streams["ops"]),
         "ttl_ops": agg.ttl_ops(streams["ttl_pre"]),
         "op_stats": agg.op_stats(streams["ops"]),
@@ -142,4 +122,28 @@ def build(
         "ignored": agg.ignored_stats(streams["ignored"]),
         "ignored_sample": route.ignored_sample(streams["ignored"]),
     }
-    return PipelineResult(streams=streams, sinks=sinks, workdir=workdir)
+
+
+def build(
+    pages: DataFrame | str,
+    cache: bool = True,
+    ignore_patterns: list[str] | None = None,
+) -> PipelineResult:
+    """Stage (or, with cache=False, lazily view) the routed streams of
+    `pages`, a pages frame or the path of a pages parquet table, and plan
+    every report sink over them (plan_sinks). Both modes route through
+    route.routed_parse with `ignore_patterns`, as manifest.run_resumable
+    does per day."""
+    if isinstance(pages, str):
+        pages = read_pages(SparkSession.active(), path=pages)
+    workdir = None
+    if cache:
+        workdir = os.path.join(datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}")
+        try:
+            streams = _staged_streams(pages, workdir, ignore_patterns)
+        except BaseException:
+            _remove_dir(workdir)
+            raise
+    else:
+        streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
+    return PipelineResult(streams=streams, sinks=plan_sinks(streams), workdir=workdir)

@@ -82,10 +82,8 @@ def build_session(
         # routed checkpoint (3-round interleaved A/B, sf0.1): write and read
         # times equal to snappy/lz4/none within noise, 42% smaller files than
         # snappy (60 vs 104 MB) — pure win locally, and the production-right
-        # choice where checkpoint bytes cross a network. Env override for
-        # experiments.
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
+        # choice where checkpoint bytes cross a network.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
         # PySpark wraps every Column method to record its Python call site:
         # a conf read plus two JVM calls each, about half the py4j round
@@ -98,11 +96,7 @@ def build_session(
     # Split sizing stays at Spark's default 128 MiB: the synthetic pages table
     # is written as N part files (datagen.n_files) so scan parallelism comes
     # from the file layout, exactly as a 100 TB table's thousands of files
-    # would provide — not from a local-only split-size hack (round-3 verdict
-    # item 7). Env knob kept for experiments only.
-    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if mpb:
-        builder = builder.config("spark.sql.files.maxPartitionBytes", mpb)
+    # would provide — not from a local-only split-size hack.
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():

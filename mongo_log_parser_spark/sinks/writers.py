@@ -36,14 +36,29 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-SINK_SORT_KEYS = {
-    # every report sorts by count desc (SURVEY.md §2.7)
-    "main_ops": "count", "ttl_ops": "count", "op_stats": "count",
-    "query_hash": "count", "plan_cache": "count", "index_stats": "count",
-    "error_codes": "count", "transactions": "count",
-    "app_conn_stats": "distinct_connections", "driver_stats": "connection_count",
-    "ignored": "count",
-}
+# report sections in document order: (report.json key, sink it renders,
+# HTML title, sort key). Every report sorts by count desc (SURVEY.md §2.7);
+# slowPlanning keeps its sink's own top-K key (_sorted).
+REPORT_SECTIONS = (
+    ("mainOperations", "main_ops", "Main Operations", "count"),
+    ("ttlOperations", "ttl_ops", "TTL Operations", "count"),
+    ("operationTypeStats", "op_stats", "Operation Type Stats", "count"),
+    ("errorCodes", "error_codes", "Error Codes", "count"),
+    ("queryHashAnalysis", "query_hash", "Query Hash Analysis (top 100)", "count"),
+    ("planCacheAnalysis", "plan_cache", "Plan Cache", "count"),
+    ("indexStats", "index_stats", "Index Usage", "count"),
+    ("transactions", "transactions", "Transactions", "count"),
+    ("slowPlanning", "slow_planning", "Slow Planning (top 50)", None),
+    ("appNameConnections", "app_conn_stats", "App Connections", "distinct_connections"),
+    ("driverStats", "driver_stats", "Driver Stats", "connection_count"),
+    ("ignoredCategories", "ignored", "Ignored Line Categories", "count"),
+)
+SINK_SORT_KEYS = {sink: key for _, sink, _, key in REPORT_SECTIONS if key}
+
+# the reference's only bounded report sections: queryHash top-100
+# (JsonReportGenerator.java:251) and slowPlanning top-50
+TOP_QUERY_HASHES = 100
+TOP_SLOW_PLANNING = 50
 
 
 def _sorted(name: str, df: DataFrame) -> DataFrame:
@@ -56,16 +71,9 @@ def _sorted(name: str, df: DataFrame) -> DataFrame:
 
 
 def _sort_table(name: str, table: pa.Table) -> pa.Table:
-    """_sorted's order applied to an Arrow table. sort_indices is stable, so
-    ties keep read order, as they do in Spark's sort of the same scan."""
-    if name == "slow_planning":
-        # Spark's asc puts nulls first and its desc puts them last, but
-        # pyarrow places nulls once per sort, so a null url sorts first
-        # through its own validity key
-        keyed = table.append_column("_url_valid", pc.is_valid(table["url"]))
-        keys = [("planning_us", "descending"), ("_url_valid", "ascending"),
-                ("url", "ascending")]
-        return table.take(pc.sort_indices(keyed, sort_keys=keys, null_placement="at_end"))
+    """_sorted's order applied to an Arrow table of an unbounded section's
+    sink. sort_indices is stable, so ties keep read order, as they do in
+    Spark's sort of the same scan."""
     key = SINK_SORT_KEYS.get(name)
     if not (key and key in table.column_names):
         return table
@@ -156,16 +164,6 @@ def console_report(sinks: dict[str, DataFrame], n: int = 20) -> None:
         _sorted(name, df).show(n, truncate=80)
 
 
-# report.json sections in document order, with the sink each renders
-REPORT_SECTIONS = (
-    ("mainOperations", "main_ops"), ("ttlOperations", "ttl_ops"),
-    ("operationTypeStats", "op_stats"), ("errorCodes", "error_codes"),
-    ("queryHashAnalysis", "query_hash"), ("planCacheAnalysis", "plan_cache"),
-    ("indexStats", "index_stats"), ("transactions", "transactions"),
-    ("slowPlanning", "slow_planning"), ("appNameConnections", "app_conn_stats"),
-    ("driverStats", "driver_stats"), ("ignoredCategories", "ignored"),
-)
-
 # A12 global summaries: sums over the full rollups, reproducing the
 # reference's lossy Σ avg*count totalDocsExamined
 # (JsonReportGenerator.java:96-106)
@@ -196,7 +194,6 @@ def _totals(sinks: dict[str, DataFrame], names: list[str]) -> dict[str, list[int
 
 
 def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
-                top_query_hashes: int | None = 100, top_slow_planning: int | None = 50,
                 top_sections: int | None = None) -> dict[str, Any]:
     """K3/A12 — the nested JSON report document (JsonReportGenerator.java:29-89).
 
@@ -218,10 +215,10 @@ def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
     consumers can detect it. The A12 global summaries are always computed as
     Spark aggregations over the FULL sinks, not from the collected rows, so
     the summary totals stay exact regardless of any cap."""
-    bounds = {name: top_sections for _, name in REPORT_SECTIONS}
-    bounds.update(op_stats=None, ignored=None, query_hash=top_query_hashes,
-                  slow_planning=top_slow_planning)
-    totals = _totals(sinks, [name for _, name in REPORT_SECTIONS if name in sinks
+    bounds = {name: top_sections for _, name, _, _ in REPORT_SECTIONS}
+    bounds.update(op_stats=None, ignored=None, query_hash=TOP_QUERY_HASHES,
+                  slow_planning=TOP_SLOW_PLANNING)
+    totals = _totals(sinks, [name for _, name, _, _ in REPORT_SECTIONS if name in sinks
                              and (bounds[name] or name in _SUMMARY_SUMS)])
     truncation: dict[str, dict[str, int]] = {}
 
@@ -249,7 +246,7 @@ def json_report(sinks: dict[str, DataFrame], metadata: dict | None = None,
             "totalErrors": total_errors,
             "collscanPercent": round(100.0 * collscan_ops / total_ops, 2) if total_ops else 0.0,
         },
-        **{section: rows(section, name) for section, name in REPORT_SECTIONS},
+        **{section: rows(section, name) for section, name, _, _ in REPORT_SECTIONS},
     }
     if truncation:
         report["sectionTruncation"] = truncation
@@ -300,22 +297,6 @@ _SORT_JS = (
     "r.style.display=r.textContent.toLowerCase().indexOf(q)>=0?'':'none';});});"
     "</script>"
 )
-
-_HTML_SECTIONS = [
-    # (report key, title, column used for the humanized-duration hint)
-    ("mainOperations", "Main Operations", "avg_ms"),
-    ("ttlOperations", "TTL Operations", "avg_ms"),
-    ("operationTypeStats", "Operation Type Stats", None),
-    ("errorCodes", "Error Codes", None),
-    ("queryHashAnalysis", "Query Hash Analysis (top 100)", "avg_ms"),
-    ("planCacheAnalysis", "Plan Cache", "avg_ms"),
-    ("indexStats", "Index Usage", "avg_ms"),
-    ("transactions", "Transactions", "avg_ms"),
-    ("slowPlanning", "Slow Planning (top 50)", None),
-    ("appNameConnections", "App Connections", None),
-    ("driverStats", "Driver Stats", None),
-    ("ignoredCategories", "Ignored Line Categories", None),
-]
 
 _SAMPLE_COLS = {"sample_line", "sample_metadata_line", "sample_auth_line", "raw_filter",
                 "sanitized_query", "text"}
@@ -423,10 +404,10 @@ def html_report(report: dict[str, Any], shard_rows: dict[str, list[dict]] | None
         f"<th>{_esc(k)}</th>" for k in list(md) + list(sm)) + "</tr><tr>" + "".join(
         f"<td>{_esc(v)}</td>" for v in list(md.values()) + list(sm.values())) + "</tr></table>")
     parts.append("<nav>" + "".join(
-        f"<a href='#{key}'>{_esc(title)}</a>" for key, title, _ in _HTML_SECTIONS
+        f"<a href='#{key}'>{_esc(title)}</a>" for key, _, title, _ in REPORT_SECTIONS
         if report.get(key)) + "</nav>")
     trunc = report.get("sectionTruncation") or {}
-    for key, title, _ in _HTML_SECTIONS:
+    for key, _, title, _ in REPORT_SECTIONS:
         rows = report.get(key)
         if not rows:
             continue

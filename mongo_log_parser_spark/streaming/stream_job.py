@@ -133,9 +133,6 @@ def _make_session_fn(timeout_ms: int | None):
     return fn
 
 
-_session_fn = _make_session_fn(None)
-
-
 def streaming_conn_sessions(pages: DataFrame, timeout_ms: int | None = None) -> DataFrame:
     """applyInPandasWithState sessionization of connection lifecycles (J2).
 

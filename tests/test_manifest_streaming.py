@@ -5,6 +5,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongo_log_parser_spark.sources import datagen
@@ -92,6 +93,73 @@ def test_resumable_manifest_skips_completed_days(spark):
     finally:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(path, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def two_day_pages(spark, tmp_path_factory):
+    """The first two day-partitions of the sf0.001 pages table."""
+    path = str(tmp_path_factory.mktemp("two-days") / "pages")
+    spark.read.parquet(datagen.ensure_pages(0.001)).filter(
+        F.col("warc_ts") < "2025-07-03").write.parquet(path)
+    return path
+
+
+def test_resumable_routes_each_day_once(spark, two_day_pages, tmp_path, monkeypatch):
+    """run_resumable routes through the one router: should_ignore is built
+    once per day (by routed_parse) and no stream dict is derived."""
+    from mongo_log_parser_spark.functions import prefilter
+    from mongo_log_parser_spark.operators import route
+    from mongo_log_parser_spark.plans import manifest
+
+    calls = []
+    should_ignore = prefilter.should_ignore
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return should_ignore(*args, **kwargs)
+
+    def no_streams(*args, **kwargs):
+        raise AssertionError("run_resumable derived the stream dict")
+
+    monkeypatch.setattr(prefilter, "should_ignore", counted)
+    monkeypatch.setattr(route, "derive_streams", no_streams)
+    stats = manifest.run_resumable(spark, two_day_pages, str(tmp_path / "ingest"))
+    assert stats["days_processed"] == 2
+    assert len(calls) == 2
+
+
+def test_resumable_job_uses_filter_config(spark, two_day_pages, tmp_path):
+    """`--resumable --config` commits kept/ops routed with the config's
+    ignore patterns, as the report is: the committed kept rows and the
+    manifest's ignored count equal split_streams' under the same list."""
+    from mongo_log_parser_spark import job
+    from mongo_log_parser_spark.functions import prefilter
+    from mongo_log_parser_spark.operators import route
+    from mongo_log_parser_spark.plans import manifest
+
+    cfg = tmp_path / "filter.properties"
+    cfg.write_text('filter.ignore.remove = "c":"STORAGE", "c":"CONTROL"\n'
+                   'filter.ignore.add = "c":"REPL", "c":"INDEX"\n')
+    patterns = prefilter.load_filter_config(str(cfg))
+    out = tmp_path / "out"
+    args = job.build_parser().parse_args([
+        "--pages", two_day_pages, "--out", str(out), "--resumable", "--json-only",
+        "--config", str(cfg)])
+    job.run_job(spark, args)
+
+    pages = spark.read.parquet(two_day_pages)
+    want = route.split_streams(pages, ignore_patterns=patterns)
+    default = route.split_streams(pages)
+    want_n = {k: want[k].count() for k in ("kept", "ignored")}
+    # the custom list routes differently from the default one
+    assert want_n != {k: default[k].count() for k in ("kept", "ignored")}
+    ingest = str(out / "ingest")
+    m = manifest.committed_manifest(spark, ingest)
+    kept_paths = [r["kept_path"] for r in m.select("kept_path").collect()]
+    tot = m.agg(F.sum("ignored"), F.sum("kept")).collect()[0]
+    assert spark.read.parquet(*kept_paths).count() == want_n["kept"] == tot[1]
+    assert tot[0] == want_n["ignored"]
+    assert manifest.committed_ops(spark, ingest).count() == want["ops"].count()
 
 
 def test_streaming_windowed_counts_match_batch(spark):

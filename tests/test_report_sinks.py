@@ -185,8 +185,9 @@ def test_failed_sink_write_raises_after_other_writes(spark, tmp_path):
 
 
 def test_sections_keep_spark_sort_order(spark, tmp_path):
-    """Every section sorted from its Arrow snapshot lists its rows in the
-    order Spark's sort of the same single-file sink gives: key desc with
+    """Every section, sorted from its Arrow snapshot or cut in Spark
+    (queryHash, slowPlanning), lists its rows in the order Spark's sort of
+    the same single-file sink gives: key desc with
     nulls last and ties in read order; slowPlanning by planning_us desc
     (nulls last), then url asc (nulls first)."""
     rows = [("a", 3), ("b", None), ("c", 5), ("d", 3), ("e", None), ("f", 5),
@@ -195,13 +196,13 @@ def test_sections_keep_spark_sort_order(spark, tmp_path):
     crafted = {name: base.withColumnRenamed("k", key).withColumns({
                    "avg_docs": F.lit(1), "total_returned": F.lit(2),
                    "is_collscan": F.col("name") < "d"})
-               for name, key in writers.SINK_SORT_KEYS.items()}
+               for _, name, _, key in writers.REPORT_SECTIONS if key}
     slow = [("b", 3), (None, 3), ("a", 3), ("c", None), (None, 7), ("a", 7), ("a", 3)]
     crafted["slow_planning"] = spark.createDataFrame(
         slow, "url string, planning_us long").coalesce(1)
     sinks = writers.write_parquet_sinks(crafted, str(tmp_path / "sinks"))
-    report = writers.json_report(sinks, top_query_hashes=None, top_slow_planning=None)
-    for section, name in writers.REPORT_SECTIONS:
+    report = writers.json_report(sinks)
+    for section, name, _, _ in writers.REPORT_SECTIONS:
         expected = [r.asDict(recursive=True)
                     for r in writers._sorted(name, sinks[name]).collect()]
         assert report[section] == expected, section
