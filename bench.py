@@ -107,14 +107,14 @@ def _on_term(signum, frame):  # pragma: no cover - driver timeout path
     os._exit(0)
 
 
-def _all_sink_counts(spark, res):
+def _all_sink_counts(spark, sinks):
     from functools import reduce
 
     from pyspark.sql import functions as F
 
     counts = [
         df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(name).alias("sink"), "n")
-        for name, df in res.sinks.items()
+        for name, df in sinks.items()
     ]
     return reduce(lambda a, b: a.unionByName(b), counts)
 
@@ -125,7 +125,7 @@ def run_pipeline(spark, pages_path: str) -> float:
     pages = spark.read.parquet(pages_path)
     t0 = time.time()
     res = pipeline.build(pages)  # stage-checkpoints parse + extract (eager writes)
-    _all_sink_counts(spark, res).collect()
+    _all_sink_counts(spark, res.sinks).collect()
     elapsed = time.time() - t0
     res.unpersist()
     return elapsed
@@ -135,6 +135,7 @@ class _Session:
     """One warmed Spark session per (master, shuffle) — crash-retryable."""
 
     def __init__(self, master: str, shuffle_partitions: int, pages_path: str):
+        from mongo_log_parser_spark.operators import route
         from mongo_log_parser_spark.plans import pipeline
         from mongo_log_parser_spark.session import build_session
 
@@ -147,8 +148,7 @@ class _Session:
         # master, so a later local[1] width run would time 16 cores.
         try:
             warm = self.spark.read.parquet(pages_path).limit(20000)
-            wres = pipeline.build(warm, cache=False)
-            _all_sink_counts(self.spark, wres).collect()
+            _all_sink_counts(self.spark, pipeline.plan_sinks(route.split_streams(warm))).collect()
         except BaseException:
             self.stop()
             raise

@@ -45,6 +45,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
     from mongo_log_parser_spark.session import build_session
     from mongo_log_parser_spark.sources import datagen
@@ -60,10 +61,10 @@ def main() -> None:
     # warmup (same as bench.py _Session: spawn workers, JIT, page cache)
     sc.setJobDescription("warmup")
     warm = spark.read.parquet(pages_path).limit(20000)
-    wres = pipeline.build(warm, cache=False)
+    wsinks = pipeline.plan_sinks(route.split_streams(warm))
     from functools import reduce
     counts = [df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(n).alias("sink"), "n")
-              for n, df in wres.sinks.items()]
+              for n, df in wsinks.items()]
     reduce(lambda a, b: a.unionByName(b), counts).collect()
 
     # ---- stage-split checkpoint phase ----

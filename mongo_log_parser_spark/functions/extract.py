@@ -172,8 +172,3 @@ def extract_ops(parsed: DataFrame) -> DataFrame:
                    F.lit(False)).alias("is_change_stream"),
     )
     return out.filter(F.col("op").isNotNull())
-
-
-def ops(parsed: DataFrame) -> DataFrame:
-    """Dispatched rows that pass the namespace filter — the main-op row set."""
-    return extract_ops(parsed).filter(F.col("ns_pass"))

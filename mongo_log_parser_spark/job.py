@@ -71,8 +71,6 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run_job(spark, args) -> dict:
     """The job body, session-lifecycle-free (testable against a shared session)."""
-    from pyspark.sql import functions as F
-
     from .functions import prefilter
     from .plans import manifest, pipeline
     from .sinks import writers
@@ -94,42 +92,13 @@ def run_job(spark, args) -> dict:
                                        ignore_patterns=ignore_patterns)
         print(json.dumps({"manifest": stats}))
 
-    res = pipeline.build(pages, ignore_patterns=ignore_patterns)
+    # --ns-filter gates every ns-scoped sink and --shards adds the per-shard
+    # copies, both inside the one sink plan (pipeline.plan_sinks)
+    res = pipeline.build(pages, ignore_patterns=ignore_patterns,
+                         ns_filter=args.ns_filter, shards=args.shards)
     try:
-        ops = res.streams["ops"]
-        if args.ns_filter:
-            # The reference applies user namespace filters inside dispatch
-            # (matchesNamespaceFilter, LogParserTask.java:361-408), gating every
-            # ns-scoped analysis — so AND the predicate into ns_pass and re-plan
-            # the sinks over the filtered ops/ttl_pre (globals and --shards
-            # copies therefore agree: a shard rollup sums to its global).
-            pred = logfiles.namespace_filter_predicate(args.ns_filter)
-            ops = ops.withColumn(
-                "ns_pass", F.col("ns_pass") & pred(F.col("db"), F.col("coll")))
-            res.streams["ops"] = ops
-            res.streams["ttl_pre"] = res.streams["ttl_pre"].filter(
-                pred(F.col("db"), F.col("coll")))
-            res.sinks = pipeline.plan_sinks(res.streams)
-
         # reference defaults: driver stats and appName stats are opt-in
         sinks = dict(res.sinks)
-        if args.shards and "shard" in ops.columns:
-            # per-shard copies of the reference's shard-tracked accumulators
-            # (LogParser.java:557-565) via per_shard_grouped: shard/node as extra
-            # group keys — one shuffle per sink, no driver-side shard loop. The
-            # --ns-filter gate applies to these exactly as to the global rollups.
-            from .operators import aggregates as agg
-
-            sinks.update({
-                "shard_main_ops": agg.per_shard_grouped(agg.main_ops, ops),
-                "shard_ttl_ops": agg.per_shard_grouped(agg.ttl_ops, res.streams["ttl_pre"]),
-                "shard_plan_cache": agg.per_shard_grouped(agg.plan_cache, ops),
-                "shard_query_hash": agg.per_shard_grouped(agg.query_hash, ops),
-                "shard_error_codes": agg.per_shard_grouped(agg.error_codes, res.streams["errors"]),
-                "shard_transactions": agg.per_shard_grouped(
-                    agg.transactions, res.streams["transactions"]),
-                "shard_index_stats": agg.per_shard_grouped(agg.index_stats, ops),
-            })
         if not args.drivers:
             sinks.pop("driver_stats", None)
         if not args.app_name_stats:

@@ -19,7 +19,7 @@ its flags. Its callers:
   streams above from the read-back (derive_streams), together with its ops
   and conn_side stages;
 - split_streams() derives them from the lazy routed frame (the oracle gate,
-  streaming, build(cache=False));
+  streaming, and the lazy sink plan pipeline.plan_sinks(split_streams(p)));
 - manifest.run_resumable writes kept_rows() of it per day, and takes its
   ignored/kept counters from the is_ignored flag.
 """

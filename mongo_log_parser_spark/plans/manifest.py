@@ -34,9 +34,12 @@ the manifest row is the snapshot commit):
   deployment assumption; if concurrent runs double-commit a day anyway,
   committed_manifest picks one (day, lineage_id) row for paths AND counters
   together, so nothing double-counts;
-- aggregates (A1-A12) run over the committed `ops`/`kept` data — they are
-  recomputed from the resumable ingest layer, which is exactly how the
-  100 TB job stays restartable without making percentile state mergeable.
+- the report is not built from this layer: `run_job --resumable` commits
+  the ingest, then plans its aggregates (A1-A12) over pipeline.build of the
+  same pages, so each line is parsed once per layer. The committed ops carry
+  only the router's ns_pass (pipeline.plan_sinks applies --ns-filter), and
+  kept holds no ignored or TTL lines, which the ignored and ttl_ops sinks
+  read.
 """
 
 from __future__ import annotations
@@ -174,8 +177,10 @@ def run_resumable(spark: SparkSession, pages_path: str, out_dir: str,
             obs_route, F.count_if(ignored).alias("ignored"), F.count_if(~ignored).alias("kept"))
         kept_dir = _attempt_dir(out_dir, "kept", day, run_id)
         ops_dir = _attempt_dir(out_dir, "ops", day, run_id)
-        route.kept_rows(routed).write.mode("overwrite").parquet(kept_dir)
-        ops = route.extract_ops(spark.read.parquet(kept_dir))  # no re-parse
+        kept = route.kept_rows(routed)
+        kept.write.mode("overwrite").parquet(kept_dir)
+        # read back with the written schema: no footer-reading job, no re-parse
+        ops = route.extract_ops(spark.read.schema(kept.schema).parquet(kept_dir))
         ops.observe(obs_ops, F.count(F.lit(1)).alias("ops")) \
             .write.mode("overwrite").parquet(ops_dir)
         c_in, c_route, c_ops = obs_in.get, obs_route.get, obs_ops.get

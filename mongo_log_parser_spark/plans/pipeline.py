@@ -21,8 +21,10 @@ Spark can prune and push filters into:
 ops and conn_side both derive from the routed read-back and are written
 concurrently. unpersist() removes the stage dir; no stage holds cached blocks.
 
-build(cache=False) writes nothing: the streams are the lazy
-route.split_streams view, row-for-row equal to the staged ones
+plan_sinks() is the only code that turns streams into sinks, --ns-filter
+and the --shards copies included, so build() plans each sink once.
+plan_sinks(route.split_streams(pages)) writes nothing: it plans the same
+sinks over the lazy stream view, row-for-row equal to the staged ones
 (tests/test_log_pipeline.py) — right for small interactive queries.
 """
 
@@ -32,7 +34,7 @@ import logging
 import os
 import shutil
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +48,7 @@ from ..operators import joins, route
 # stage writes below must not count as sink writes.
 from ..sinks.writers import write_parquet_sinks as _write_stages
 from ..sources import datagen
+from ..sources.logfiles import namespace_filter_predicate
 
 log = logging.getLogger(__name__)
 
@@ -65,13 +68,12 @@ def read_lookup(spark: SparkSession, name: str) -> DataFrame:
 @dataclass
 class PipelineResult:
     streams: dict[str, DataFrame]
-    sinks: dict[str, DataFrame] = field(default_factory=dict)
-    workdir: str | None = None
+    sinks: dict[str, DataFrame]
+    workdir: str
 
     def unpersist(self) -> None:
         """Remove the stage dir."""
-        if self.workdir:
-            _remove_dir(self.workdir)
+        _remove_dir(self.workdir)
 
 
 def _remove_dir(path: str) -> None:
@@ -100,50 +102,72 @@ def _staged_streams(pages: DataFrame, workdir: str,
     }
 
 
-def plan_sinks(streams: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """The 13 report sinks over `streams`: the one place that pairs each
-    sink builder with the stream it reads. Builders are called through their
-    module (agg.main_ops, ...), never bound at import, so wrapping a module
-    attribute reaches every call."""
-    return {
-        "main_ops": agg.main_ops(streams["ops"]),
-        "ttl_ops": agg.ttl_ops(streams["ttl_pre"]),
-        "op_stats": agg.op_stats(streams["ops"]),
-        "query_hash": agg.query_hash(streams["ops"]),
-        "plan_cache": agg.plan_cache(streams["ops"]),
-        "index_stats": agg.index_stats(streams["ops"]),
-        "error_codes": agg.error_codes(streams["errors"]),
-        "transactions": agg.transactions(streams["transactions"]),
-        "slow_planning": agg.slow_planning(streams["ops"]),
-        "app_conn_stats": agg.app_conn_stats(streams["ops"]),
-        "driver_stats": joins.driver_stats(
-            streams["client_metadata"], streams["auth"], streams["conn_lifecycle"]
-        ),
-        "ignored": agg.ignored_stats(streams["ignored"]),
-        "ignored_sample": route.ignored_sample(streams["ignored"]),
-    }
+# (sink, the stream it reads, has a per-shard copy) for each sink planned by
+# the aggregates builder of its name. The per-shard copies are the
+# reference's shard-tracked accumulators (LogParser.java:557-565).
+_AGG_SINKS = (
+    ("main_ops", "ops", True),
+    ("ttl_ops", "ttl_pre", True),
+    ("op_stats", "ops", False),
+    ("query_hash", "ops", True),
+    ("plan_cache", "ops", True),
+    ("index_stats", "ops", True),
+    ("error_codes", "errors", True),
+    ("transactions", "transactions", True),
+    ("slow_planning", "ops", False),
+    ("app_conn_stats", "ops", False),
+)
+
+
+def plan_sinks(streams: dict[str, DataFrame], ns_filter: list[str] | None = None,
+               shards: bool = False) -> dict[str, DataFrame]:
+    """The report sinks over `streams`: the one place that pairs each sink
+    builder with the stream it reads. Builders are looked up on their module
+    at plan time, never bound at import, so wrapping a module attribute
+    reaches every call.
+
+    `ns_filter` (--ns-filter) is ANDed into ops.ns_pass and filters ttl_pre
+    before any builder reads them, as the reference's matchesNamespaceFilter
+    gates every ns-scoped analysis (LogParserTask.java:361-408). `shards`
+    (--shards) adds the agg.per_shard_grouped copy shard_<sink> of each
+    shard-tracked sink when the streams carry a shard column."""
+    read = dict(streams)
+    if ns_filter:
+        pred = namespace_filter_predicate(ns_filter)
+        read["ops"] = read["ops"].withColumn(
+            "ns_pass", F.col("ns_pass") & pred(F.col("db"), F.col("coll")))
+        read["ttl_pre"] = read["ttl_pre"].filter(pred(F.col("db"), F.col("coll")))
+    sinks = {sink: getattr(agg, sink)(read[stream]) for sink, stream, _ in _AGG_SINKS}
+    sinks["driver_stats"] = joins.driver_stats(
+        read["client_metadata"], read["auth"], read["conn_lifecycle"])
+    sinks["ignored"] = agg.ignored_stats(read["ignored"])
+    sinks["ignored_sample"] = route.ignored_sample(read["ignored"])
+    if shards and "shard" in read["ops"].columns:
+        # shard/node become extra group keys: one shuffle per sink, no
+        # driver-side shard loop
+        sinks.update({f"shard_{sink}": agg.per_shard_grouped(getattr(agg, sink), read[stream])
+                      for sink, stream, per_shard in _AGG_SINKS if per_shard})
+    return sinks
 
 
 def build(
     pages: DataFrame | str,
-    cache: bool = True,
     ignore_patterns: list[str] | None = None,
+    ns_filter: list[str] | None = None,
+    shards: bool = False,
 ) -> PipelineResult:
-    """Stage (or, with cache=False, lazily view) the routed streams of
-    `pages`, a pages frame or the path of a pages parquet table, and plan
-    every report sink over them (plan_sinks). Both modes route through
+    """Stage the routed streams of `pages`, a pages frame or the path of a
+    pages parquet table, and plan every report sink over them
+    (plan_sinks with `ns_filter` and `shards`). The streams route through
     route.routed_parse with `ignore_patterns`, as manifest.run_resumable
-    does per day."""
+    routes each day."""
     if isinstance(pages, str):
         pages = read_pages(SparkSession.active(), path=pages)
-    workdir = None
-    if cache:
-        workdir = os.path.join(datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}")
-        try:
-            streams = _staged_streams(pages, workdir, ignore_patterns)
-        except BaseException:
-            _remove_dir(workdir)
-            raise
-    else:
-        streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
-    return PipelineResult(streams=streams, sinks=plan_sinks(streams), workdir=workdir)
+    workdir = os.path.join(datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}")
+    try:
+        streams = _staged_streams(pages, workdir, ignore_patterns)
+    except BaseException:
+        _remove_dir(workdir)
+        raise
+    return PipelineResult(streams=streams, workdir=workdir,
+                          sinks=plan_sinks(streams, ns_filter=ns_filter, shards=shards))

@@ -46,6 +46,7 @@ def main() -> None:
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 0.1
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
     from mongo_log_parser_spark.session import build_session
     from mongo_log_parser_spark.sources import datagen
@@ -54,9 +55,9 @@ def main() -> None:
     spark = build_session(app_name="ab-arrow-batch", master="local[16]",
                           shuffle_partitions=16)
     # warmup (spawns workers, JITs, primes page cache)
-    warm = pipeline.build(spark.read.parquet(path).limit(20000), cache=False)
+    warm = pipeline.plan_sinks(route.split_streams(spark.read.parquet(path).limit(20000)))
     from pyspark.sql import functions as F
-    for df in warm.sinks.values():
+    for df in warm.values():
         df.agg(F.count(F.lit(1))).collect()
 
     pages = spark.read.parquet(path)

@@ -22,12 +22,12 @@ import time
 from functools import reduce
 
 
-def all_sink_counts(res):
+def all_sink_counts(sinks):
     from pyspark.sql import functions as F
 
     counts = [
         df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(name).alias("sink"), "n")
-        for name, df in res.sinks.items()
+        for name, df in sinks.items()
     ]
     return reduce(lambda a, b: a.unionByName(b), counts)
 
@@ -37,6 +37,7 @@ def main() -> None:
     ap.add_argument("--sf", type=float, default=0.3)
     args = ap.parse_args()
 
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
     from mongo_log_parser_spark.session import build_session
     from mongo_log_parser_spark.sources import datagen
@@ -50,14 +51,13 @@ def main() -> None:
     # inside the timed run): sample() keeps all part-files in the scan, so
     # each executor's Python workers get primed.
     warm = spark.read.parquet(pages_path).sample(fraction=0.03, seed=7)
-    wres = pipeline.build(warm, cache=False)
-    all_sink_counts(wres).collect()
+    all_sink_counts(pipeline.plan_sinks(route.split_streams(warm))).collect()
 
     pages = spark.read.parquet(pages_path)
     t0 = time.time()
     res = pipeline.build(pages)
     t_build = time.time() - t0  # parse + kept/ops checkpoint writes
-    all_sink_counts(res).collect()
+    all_sink_counts(res.sinks).collect()
     elapsed = time.time() - t0
     res.unpersist()
 

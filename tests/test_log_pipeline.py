@@ -172,26 +172,27 @@ def test_pushdown_reaches_scan(spark):
 
 
 def test_lazy_and_checkpointed_build_equal(pages_001):
-    """build(cache=False), the lazy route.split_streams view, and the
+    """The lazy plan_sinks(route.split_streams(pages)) view and the
     checkpointed build() agree on every sink and stream: the same rows both
     ways round, and the same (name, type) columns. Nullability is not
     compared: the parquet round trip erases it."""
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
 
-    lazy = pipeline.build(pages_001, cache=False)
+    lazy_streams = route.split_streams(pages_001)
+    lazy_sinks = pipeline.plan_sinks(lazy_streams)
     ckpt = pipeline.build(pages_001)
     try:
-        assert len(lazy.sinks) == 13
-        assert lazy.sinks.keys() == ckpt.sinks.keys()
-        assert lazy.streams.keys() == ckpt.streams.keys()
-        pairs = [(f"sink {k}", lazy.sinks[k], ckpt.sinks[k]) for k in lazy.sinks]
-        pairs += [(f"stream {k}", lazy.streams[k], ckpt.streams[k]) for k in lazy.streams]
+        assert len(lazy_sinks) == 13
+        assert lazy_sinks.keys() == ckpt.sinks.keys()
+        assert lazy_streams.keys() == ckpt.streams.keys()
+        pairs = [(f"sink {k}", lazy_sinks[k], ckpt.sinks[k]) for k in lazy_sinks]
+        pairs += [(f"stream {k}", lazy_streams[k], ckpt.streams[k]) for k in lazy_streams]
         for name, a, b in pairs:
             assert a.dtypes == b.dtypes, name
             assert a.exceptAll(b).count() == 0, name
             assert b.exceptAll(a).count() == 0, name
     finally:
-        lazy.unpersist()
         ckpt.unpersist()
 
 
@@ -249,15 +250,16 @@ def test_driver_stats_write_leaves_no_persisted_rdd(spark, pages_001, tmp_path):
 
 
 def test_lazy_build_starts_no_job(spark, pages_001):
-    """build(cache=False) only builds plans: no Spark job runs under its job
-    group."""
+    """The lazy sink plan, plan_sinks(route.split_streams(pages)), only
+    builds plans: no Spark job runs under its job group."""
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
 
     sc = spark.sparkContext
     group = "lazy-build-starts-no-job"
     sc.setJobGroup(group, group)
     try:
-        pipeline.build(pages_001, cache=False)
+        pipeline.plan_sinks(route.split_streams(pages_001))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -113,6 +113,27 @@ def test_empty_sink_round_trips(spark, tmp_path):
     assert (out / "sinks" / "main_ops").is_dir()
 
 
+def test_ns_filter_plans_sinks_once(spark, tmp_path, monkeypatch):
+    """--ns-filter is applied inside the one sink plan: run_job calls
+    pipeline.plan_sinks once, and the report holds only filtered rows."""
+    from mongo_log_parser_spark.plans import pipeline
+
+    calls = []
+    plan_sinks = pipeline.plan_sinks
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs)
+        return plan_sinks(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "plan_sinks", counted)
+    out = tmp_path / "out"
+    _run_job(spark, out, "--json-only", "--ns-filter", "appdb.*")
+    assert len(calls) == 1
+    report = json.load(open(out / "report.json"))
+    assert report["mainOperations"]
+    assert {r["db"] for r in report["mainOperations"]} == {"appdb"}
+
+
 def test_failed_writer_releases_stage_dir(spark, tmp_path, monkeypatch):
     """A writer that raises still releases the stage dir, and the run leaves
     no persisted RDD."""

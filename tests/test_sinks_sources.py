@@ -158,13 +158,14 @@ def test_namespace_filter_predicate(spark):
 
 
 def test_json_report_and_csv_sinks(spark):
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
 
-    res = pipeline.build(pipeline.read_pages(spark, sf=0.001), cache=False)
+    sinks = pipeline.plan_sinks(route.split_streams(pipeline.read_pages(spark, sf=0.001)))
     # default: sections are UNBOUNDED like the reference JSON (only queryHash
     # top-100 / slowPlanning top-50 are reference-bounded); no truncation key
-    full = writers.json_report(res.sinks, metadata={"source": "sf0.001"})
-    assert full["summary"]["uniquePatterns"] == res.sinks["main_ops"].count()
+    full = writers.json_report(sinks, metadata={"source": "sf0.001"})
+    assert full["summary"]["uniquePatterns"] == sinks["main_ops"].count()
     assert full["summary"]["uniquePatterns"] > 100
     assert len(full["mainOperations"]) == full["summary"]["uniquePatterns"]
     assert len(full["queryHashAnalysis"]) <= 100
@@ -172,7 +173,7 @@ def test_json_report_and_csv_sinks(spark):
     assert "mainOperations" not in full.get("sectionTruncation", {})
     # opt-in scale cap (--top-sections): O(top-N) assembly, dropped rows
     # disclosed per section so consumers can detect truncation
-    report = writers.json_report(res.sinks, metadata={"source": "sf0.001"},
+    report = writers.json_report(sinks, metadata={"source": "sf0.001"},
                                  top_sections=100)
     assert report["summary"]["totalOperations"] > 0
     # summary totals still come from the FULL sinks (Spark-side aggregation)
@@ -192,9 +193,9 @@ def test_json_report_and_csv_sinks(spark):
     tmp = tempfile.mkdtemp(prefix="mlp-report-", dir="/root/repo/data")
     try:
         p = os.path.join(tmp, "report.json")
-        writers.write_json_report(res.sinks, p)
+        writers.write_json_report(sinks, p)
         assert json.load(open(p))["summary"]["totalOperations"] == report["summary"]["totalOperations"]
-        writers.write_csv_sinks({"op_stats": res.sinks["op_stats"]}, tmp)
+        writers.write_csv_sinks({"op_stats": sinks["op_stats"]}, tmp)
         csvdir = os.path.join(tmp, "op_stats_csv")
         files = [f for f in os.listdir(csvdir) if f.endswith(".csv")]
         assert files and open(os.path.join(csvdir, files[0])).readline().startswith("op_stat,")
@@ -215,7 +216,7 @@ def test_json_report_and_csv_sinks(spark):
         # opt-in truncation disclosed in the rendered section header
         assert "showing top 100 of" in html
         hp = os.path.join(tmp, "report.html")
-        writers.write_html_report(res.sinks, hp, metadata={"source": "sf0.001"})
+        writers.write_html_report(sinks, hp, metadata={"source": "sf0.001"})
         assert os.path.getsize(hp) > 10000
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -415,8 +416,9 @@ def test_logfile_urls_partition_invariant(spark):
 
 def test_shards_with_ns_filter_consistent(spark, tmp_path):
     """--ns-filter + --shards: the ns-filter predicate applies uniformly, so
-    every shard rollup sums exactly to its ns-filtered global counterpart
-    (the reference gates all analyses through matchesNamespaceFilter)."""
+    each of the 7 shard rollups sums exactly to its ns-filtered global
+    counterpart (the reference gates all analyses through
+    matchesNamespaceFilter)."""
     import json as _json
 
     from mongo_log_parser_spark import job
@@ -439,7 +441,9 @@ def test_shards_with_ns_filter_consistent(spark, tmp_path):
             return pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
 
         checked = 0
-        for name in ("main_ops", "plan_cache", "query_hash", "index_stats"):
+        for name in ("main_ops", "plan_cache", "query_hash", "index_stats",
+                     "ttl_ops", "error_codes", "transactions"):
+            assert (out / "sinks" / f"shard_{name}").is_dir(), name
             g, s = sink(name), sink(f"shard_{name}")
             assert (g["count"].sum() if len(g) else 0) == (s["count"].sum() if len(s) else 0), name
             if len(g):

@@ -80,11 +80,12 @@ def test_spark_submit_local_cluster(spark):
             submitted = json.load(f)
 
     # same input, in-process local mode (the shared test session)
+    from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.plans import pipeline
     from mongo_log_parser_spark.sinks import writers
 
-    res = pipeline.build(pipeline.read_pages(spark, sf=0.001), cache=False)
-    local = writers.json_report(res.sinks, metadata={})
+    sinks = pipeline.plan_sinks(route.split_streams(pipeline.read_pages(spark, sf=0.001)))
+    local = writers.json_report(sinks, metadata={})
 
     def multiset(rows):
         # count-desc ties are partition-order-dependent; compare as multisets
