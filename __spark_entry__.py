@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from mongo_log_parser_spark.contracts import data_oracle, log_oracle
 from mongo_log_parser_spark.contracts.data_queries import DATA_QUERIES
 from mongo_log_parser_spark.contracts.log_queries import LOG_QUERIES
-from mongo_log_parser_spark.operators import aggregates, route
+from mongo_log_parser_spark.operators import route
+from mongo_log_parser_spark.plans import pipeline
 from mongo_log_parser_spark.sources import datagen
 
 # the driver runs oracle SQL against fixed paths — make sure they exist
@@ -28,10 +29,10 @@ datagen.ensure_pages(0.01)
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: end-to-end parse → route → A1 main-ops aggregate."""
+    """Flagship query: end-to-end parse → route → A1 main-ops aggregate,
+    the main_ops sink of the production planner pipeline.plan_sinks."""
     pages = spark.read.parquet(datagen.ensure_pages(0.001))
-    streams = route.split_streams(pages)
-    return aggregates.main_ops(streams["ops"])
+    return pipeline.plan_sinks(route.split_streams(pages))["main_ops"]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,7 +1,14 @@
 """Driver-contract Spark queries for the log pipeline (pages table).
 
-Each function takes (spark, sf_dir) and returns a DataFrame whose column
+Each query takes (spark, sf_dir) and returns a DataFrame whose column
 names/values match the corresponding DuckDB oracle in log_oracle.py.
+
+Every report-sink query (the 13 sinks, the two shard_* copies and the
+plan-cache multi-plan rollup over the plan_cache sink) is a `_sink_query`:
+it takes its sink from pipeline.plan_sinks, the planner run_job uses, over
+the lazy stream view route.split_streams. So the gate checks production's
+builder→stream pairing and --shards wiring, not a copy of them. The other
+queries check stream-level and standalone operators directly.
 
 sf_dir (e.g. /root/testdata/sf0.01) selects the scale factor; the pages
 table itself is the deterministic synthetic table from sources/datagen.py
@@ -42,6 +49,20 @@ def _round_p95(df: DataFrame) -> DataFrame:
     return df
 
 
+def _sink_query(sink: str, shards: bool = False, then=lambda df: df):
+    """The contract query for `sink` as pipeline.plan_sinks plans it over
+    the lazy stream view, then `then`. `shards` gives the synthetic pages
+    (which have no filename shard) the oracle's 16-way shard identity, the
+    first md5(url) hex nibble, so `sink` can be a shard_* copy."""
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        pages = _pages(spark, sf_dir)
+        if shards:
+            pages = pages.withColumn("shard", F.substring(F.md5(F.col("url")), 1, 1))
+        sinks = pipeline.plan_sinks(route.split_streams(pages), shards=shards)
+        return _round_p95(then(sinks[sink]))
+    return query
+
+
 def q_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _streams(spark, sf_dir)
     counts = [
@@ -51,10 +72,6 @@ def q_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     u = counts[0].unionByName(counts[1]).unionByName(counts[2])
     return u.groupBy("stream").agg(F.count(F.lit(1)).alias("count"))
-
-
-def q_ignored_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.ignored_stats(_streams(spark, sf_dir)["ignored"])
 
 
 def q_parsed_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,92 +89,10 @@ def q_parsed_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ignored_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F8 — deterministic 1-in-100 ignored-line sample."""
-    return route.ignored_sample(_streams(spark, sf_dir)["ignored"])
-
-
-def q_main_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _round_p95(agg.main_ops(_streams(spark, sf_dir)["ops"]))
-
-
-def q_shard_main_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """--shards via per_shard_grouped: shard identity as an extra GROUP KEY in
-    the one-shuffle rollup (the scale-shaped replacement for the driver-side
-    per-shard branch loop; LogParser.java:557-565 per-ShardInfo map analog).
-
-    The synthetic pages table has no filename shard, so the shard identity is
-    derived deterministically from the url (first md5 hex nibble → 16
-    shards) — same derivation in the DuckDB oracle."""
-    pages = _pages(spark, sf_dir).withColumn(
-        "shard", F.substring(F.md5(F.col("url")), 1, 1))
-    ops = route.split_streams(pages)["ops"]
-    return _round_p95(agg.per_shard_grouped(agg.main_ops, ops))
-
-
-def q_ttl_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.ttl_ops(_streams(spark, sf_dir)["ttl_pre"])
-
-
-def q_op_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.op_stats(_streams(spark, sf_dir)["ops"])
-
-
-def q_query_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _round_p95(agg.query_hash(_streams(spark, sf_dir)["ops"]))
-
-
-def q_shard_query_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """per_shard_grouped over the most complex builder (A4: base agg + unified
-    kv-map sub-agg + join) — shard key threads through both aggregations and
-    the join, still one shuffle chain. Shard = first md5(url) nibble (same
-    derivation as log_shard_main_ops / the DuckDB oracle)."""
-    pages = _pages(spark, sf_dir).withColumn(
-        "shard", F.substring(F.md5(F.col("url")), 1, 1))
-    ops = route.split_streams(pages)["ops"]
-    return _round_p95(agg.per_shard_grouped(agg.query_hash, ops,
-                                            shard_cols=("shard",)))
-
-
-def q_plan_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _round_p95(agg.plan_cache(_streams(spark, sf_dir)["ops"]))
-
-
-def q_plan_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5b — query hashes that cached >1 distinct plan (multi-plan report)."""
-    return agg.plan_cache_multi(agg.plan_cache(_streams(spark, sf_dir)["ops"]))
-
-
-def q_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _round_p95(agg.index_stats(_streams(spark, sf_dir)["ops"]))
-
-
-def q_error_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.error_codes(_streams(spark, sf_dir)["errors"])
-
-
-def q_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.transactions(_streams(spark, sf_dir)["transactions"])
-
-
-def q_slow_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.slow_planning(_streams(spark, sf_dir)["ops"])
-
-
-def q_app_conn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.app_conn_stats(_streams(spark, sf_dir)["ops"])
-
-
 def q_conn_lifetimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joins.conn_lifetimes(_streams(spark, sf_dir)["conn_lifecycle"]).select(
         "conn_id", "start_ms", "end_ms", "lifetime_ms"
     )
-
-
-def q_driver_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _streams(spark, sf_dir)
-    df = joins.driver_stats(s["client_metadata"], s["auth"], s["conn_lifecycle"])
-    return df.drop("sample_metadata_line", "sample_auth_line")
 
 
 def q_ts_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,24 +188,25 @@ def q_stream_conn_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LOG_QUERIES = {
     "log_route_counts": q_route_counts,
-    "log_ignored_categories": q_ignored_categories,
-    "log_ignored_sample": q_ignored_sample,
+    "log_ignored_categories": _sink_query("ignored"),
+    "log_ignored_sample": _sink_query("ignored_sample"),
     "log_parsed_ops": q_parsed_ops,
-    "log_main_ops": q_main_ops,
-    "log_shard_main_ops": q_shard_main_ops,
-    "log_ttl_ops": q_ttl_ops,
-    "log_op_stats": q_op_stats,
-    "log_query_hash": q_query_hash,
-    "log_shard_query_hash": q_shard_query_hash,
-    "log_plan_cache": q_plan_cache,
-    "log_plan_multi": q_plan_multi,
-    "log_index_stats": q_index_stats,
-    "log_error_codes": q_error_codes,
-    "log_transactions": q_transactions,
-    "log_slow_planning": q_slow_planning,
-    "log_app_conn_stats": q_app_conn_stats,
+    "log_main_ops": _sink_query("main_ops"),
+    "log_shard_main_ops": _sink_query("shard_main_ops", shards=True),
+    "log_ttl_ops": _sink_query("ttl_ops"),
+    "log_op_stats": _sink_query("op_stats"),
+    "log_query_hash": _sink_query("query_hash"),
+    "log_shard_query_hash": _sink_query("shard_query_hash", shards=True),
+    "log_plan_cache": _sink_query("plan_cache"),
+    "log_plan_multi": _sink_query("plan_cache", then=agg.plan_cache_multi),
+    "log_index_stats": _sink_query("index_stats"),
+    "log_error_codes": _sink_query("error_codes"),
+    "log_transactions": _sink_query("transactions"),
+    "log_slow_planning": _sink_query("slow_planning"),
+    "log_app_conn_stats": _sink_query("app_conn_stats"),
     "log_conn_lifetimes": q_conn_lifetimes,
-    "log_driver_stats": q_driver_stats,
+    "log_driver_stats": _sink_query(
+        "driver_stats", then=lambda df: df.drop("sample_metadata_line", "sample_auth_line")),
     "log_ts_range": q_ts_range,
     "log_enrich_site_class": q_enrich_site_class,
     "log_salted_op_rollup": q_salted_op_rollup,

@@ -524,9 +524,10 @@ exec(compile(_gen_batch_source(), "<parse._parse_batch>", "exec"), _GEN_NS)
 _parse_batch = _GEN_NS["_parse_batch"]
 
 
-def parse_lines(df: DataFrame, text_col: str = "text",
-                extra_cols: tuple[str, ...] = (), skip_col: str | None = None) -> DataFrame:
-    """Vectorized parse: pages-shaped DataFrame → flat parsed DataFrame.
+def parse_lines(df: DataFrame, extra_cols: tuple[str, ...] = (),
+                skip_col: str | None = None) -> DataFrame:
+    """Vectorized parse: pages-shaped DataFrame → flat parsed DataFrame; the
+    line is its `text` column.
 
     extra_cols: input columns passed through verbatim after the parse fields
     (the routed-checkpoint flags). skip_col: optional boolean input column;
@@ -566,7 +567,7 @@ def parse_lines(df: DataFrame, text_col: str = "text",
             # zero-copy cast to binary: orjson takes the utf-8 bytes directly,
             # skipping the str round-trip's re-encode (measured −3%/row; the
             # parquet column is a string type, so the bytes are valid utf-8)
-            texts = batch.column(text_col).cast("binary").to_pylist()
+            texts = batch.column("text").cast("binary").to_pylist()
             skips = (batch.column(skip_col).to_pylist()
                      if skip_col is not None else None)
             _parse_batch(texts, out, skips)

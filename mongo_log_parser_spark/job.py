@@ -76,6 +76,9 @@ def run_job(spark, args) -> dict:
     from .sinks import writers
     from .sources import datagen, logfiles
 
+    if args.resumable and args.logs:
+        raise ValueError("--resumable needs --pages or --sf: raw --logs carry "
+                         "no warc_ts for the per-day manifest to partition on")
     if args.logs:
         pages = logfiles.read_log_files(spark, args.logs, limit_per_file=args.limit)
         pages_path = None
@@ -87,7 +90,7 @@ def run_job(spark, args) -> dict:
     ignore_patterns = (
         prefilter.load_filter_config(args.filter_config) if args.filter_config else None
     )
-    if args.resumable and pages_path:
+    if args.resumable:
         stats = manifest.run_resumable(spark, pages_path, os.path.join(args.out, "ingest"),
                                        ignore_patterns=ignore_patterns)
         print(json.dumps({"manifest": stats}))

@@ -365,7 +365,12 @@ def transactions(txn: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-def slow_planning(ops: DataFrame, k: int = 50) -> DataFrame:
+# the reference's slowPlanning top-50 (SlowPlanningAccumulator.java:16-58),
+# also the report section's bound (writers.json_report)
+TOP_SLOW_PLANNING = 50
+
+
+def slow_planning(ops: DataFrame) -> DataFrame:
     """A9 — global top-K by planningTimeMicros (SlowPlanningAccumulator.java:16-58).
     Catalyst executes this as TakeOrderedAndProject — per-partition top-K then
     merge, the distributed version of the reference's threshold prune (O7)."""
@@ -375,7 +380,7 @@ def slow_planning(ops: DataFrame, k: int = 50) -> DataFrame:
         .withColumn("ns", F.concat_ws(".", "db", "coll"))
         .select("ns", "op", "plan_summary", "planning_us", "raw_filter", "ts_str", "url")
         .orderBy(F.desc("planning_us"), F.asc("url"))
-        .limit(k)
+        .limit(TOP_SLOW_PLANNING)
     )
 
 
@@ -409,7 +414,12 @@ def timestamp_range(kept: DataFrame) -> DataFrame:
     )
 
 
-def per_shard(builder, df: DataFrame, shard_cols: tuple[str, ...] = ("shard", "node")):
+def _shard_keys(df: DataFrame) -> tuple[str, ...]:
+    """The shard identity columns `df` carries: filename shard, then node."""
+    return tuple(c for c in ("shard", "node") if c in df.columns)
+
+
+def per_shard(builder, df: DataFrame):
     """Per-shard variant of any sink builder — the --shards mode
     (LogParser.java:557-565 keeps a map of per-ShardInfo accumulator copies;
     this is the same structure: one rollup per shard identity, shard columns
@@ -424,6 +434,7 @@ def per_shard(builder, df: DataFrame, shard_cols: tuple[str, ...] = ("shard", "n
     """
     from functools import reduce
 
+    shard_cols = _shard_keys(df)
     shards = sorted(
         df.select(*shard_cols).distinct().collect(),
         key=lambda r: tuple(r[c] or "" for c in shard_cols),
@@ -445,8 +456,7 @@ def per_shard(builder, df: DataFrame, shard_cols: tuple[str, ...] = ("shard", "n
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def per_shard_grouped(builder, df: DataFrame,
-                      shard_cols: tuple[str, ...] = ("shard", "node")) -> DataFrame:
+def per_shard_grouped(builder, df: DataFrame) -> DataFrame:
     """Per-shard variant of a sink builder, scale-shaped: the shard identity
     columns become EXTRA GROUP KEYS inside the builder's own aggregation —
     ONE shuffle over the stream, no driver-side shard enumeration, no
@@ -463,5 +473,4 @@ def per_shard_grouped(builder, df: DataFrame,
     At 100 TB / hundreds of shards this is the only viable shape: cost is one
     hash aggregate whose key cardinality grows ~linearly with shard count,
     versus per_shard's shards × full-scan branches."""
-    keys = tuple(c for c in shard_cols if c in df.columns)
-    return builder(df, extra_keys=keys)
+    return builder(df, extra_keys=_shard_keys(df))

@@ -135,15 +135,15 @@ def routed_parse(pages: DataFrame,
     return parse_lines(flagged, extra_cols=ROUTE_FLAG_COLS, skip_col="skip_parse")
 
 
-def ignored_sample(ignored: DataFrame, rate: int = 100) -> DataFrame:
+def ignored_sample(ignored: DataFrame) -> DataFrame:
     """F8 — ignored-line sample sink (LogParser.java:980-982).
 
     The reference writes every 100th ignored line by a global arrival counter
     (thread-racy and order-dependent). The distributed restatement samples on
     a content hash: deterministic, reproducible at any cluster size, the same
-    1-in-`rate` expected rate, and shuffle-free (a narrow filter — no global
+    1-in-100 expected rate, and shuffle-free (a narrow filter — no global
     counter to serialize on)."""
-    bucket = F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long") % rate
+    bucket = F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long") % 100
     return ignored.filter(bucket == 0).select("url", "text", "category")
 
 

@@ -36,6 +36,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregates import TOP_SLOW_PLANNING
+
 # report sections in document order: (report.json key, sink it renders,
 # HTML title, sort key). Every report sorts by count desc (SURVEY.md §2.7);
 # slowPlanning keeps its sink's own top-K key (_sorted).
@@ -56,9 +58,9 @@ REPORT_SECTIONS = (
 SINK_SORT_KEYS = {sink: key for _, sink, _, key in REPORT_SECTIONS if key}
 
 # the reference's only bounded report sections: queryHash top-100
-# (JsonReportGenerator.java:251) and slowPlanning top-50
+# (JsonReportGenerator.java:251) and slowPlanning top-50 (its sink's own
+# bound, aggregates.TOP_SLOW_PLANNING)
 TOP_QUERY_HASHES = 100
-TOP_SLOW_PLANNING = 50
 
 
 def _sorted(name: str, df: DataFrame) -> DataFrame:
@@ -157,11 +159,12 @@ def write_parquet_sinks(sinks: dict[str, DataFrame], out_dir: str) -> dict[str, 
             for name, df in sinks.items()}
 
 
-def console_report(sinks: dict[str, DataFrame], n: int = 20) -> None:
-    """K5 — fixed-width console tables (Accumulator.report analog)."""
+def console_report(sinks: dict[str, DataFrame]) -> None:
+    """K5 — fixed-width console tables, the first 20 rows of each sink
+    (Accumulator.report analog)."""
     for name, df in sinks.items():
         print(f"=== {name} ===")
-        _sorted(name, df).show(n, truncate=80)
+        _sorted(name, df).show(20, truncate=80)
 
 
 # A12 global summaries: sums over the full rollups, reproducing the

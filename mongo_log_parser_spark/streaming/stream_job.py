@@ -51,12 +51,13 @@ def streaming_ops(pages: DataFrame) -> DataFrame:
     return split_streams(pages)["ops"]
 
 
-def windowed_op_counts(ops: DataFrame, window: str = "1 day", watermark: str = "2 days") -> DataFrame:
-    """Watermarked tumbling-window per-op rollup on event time (warc_ts)."""
+def windowed_op_counts(ops: DataFrame) -> DataFrame:
+    """1-day tumbling-window per-op rollup on event time (warc_ts) under a
+    2-day watermark."""
     return (
         ops.filter(F.col("ns_pass"))
-        .withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("op"))
+        .withWatermark("warc_ts", "2 days")
+        .groupBy(F.window("warc_ts", "1 day").alias("w"), F.col("op"))
         .agg(
             F.count(F.lit(1)).alias("count"),
             F.sum("duration_ms").alias("total_ms"),

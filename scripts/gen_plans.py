@@ -9,7 +9,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from mongo_log_parser_spark.operators import aggregates, joins, route, salting
+from mongo_log_parser_spark.operators import joins, route, salting
 from mongo_log_parser_spark.plans import pipeline
 from mongo_log_parser_spark.session import build_session
 
@@ -26,6 +26,8 @@ def main():
     spark = build_session(master="local[8]", shuffle_partitions=8)
     pages = pipeline.read_pages(spark, sf=0.001)
     s = route.split_streams(pages)
+    # the sinks as production plans them (pipeline.plan_sinks)
+    sinks = pipeline.plan_sinks(s)
     sections = []
 
     ll = pipeline.read_lookup(spark, "lang_locale")
@@ -44,13 +46,13 @@ def main():
         "a bounded, mergeable KLL-style sketch (accuracy=100k), unlike exact "
         "percentile's buffer-every-value state that this replaced (executor "
         "OOM risk on heavy-hitter groups at 100 TB).",
-        fmt(aggregates.main_ops(s["ops"]), 34),
+        fmt(sinks["main_ops"], 34),
     ))
     sections.append((
         "Slow-planning top-K — TakeOrderedAndProject",
         "Per-partition top-50 then merge: the distributed version of the "
         "reference's running-threshold prune (O7).",
-        fmt(aggregates.slow_planning(s["ops"]), 24),
+        fmt(sinks["slow_planning"], 24),
     ))
     pruned = pages.filter(F.col("warc_ts") < "2025-07-03").select("url", "warc_ts")
     sections.append((
@@ -65,7 +67,7 @@ def main():
         fmt(salting.salted_op_rollup(s["ops"]), 40),
     ))
     shard_pages = pages.withColumn("shard", F.substring(F.md5(F.col("url")), 1, 1))
-    shard_ops = route.split_streams(shard_pages)["ops"]
+    shard_sinks = pipeline.plan_sinks(route.split_streams(shard_pages), shards=True)
     sections.append((
         "Per-shard rollup (per_shard_grouped) — shard as a group key, ONE Exchange, zero Unions",
         "--shards mode: the reference's per-ShardInfo accumulator map "
@@ -73,7 +75,7 @@ def main():
         "single hash aggregate — no driver-side shard enumeration, no "
         "per-shard rescans; cost grows with key cardinality, not with "
         "shards x full scans.",
-        fmt(aggregates.per_shard_grouped(aggregates.main_ops, shard_ops), 34),
+        fmt(shard_sinks["shard_main_ops"], 34),
     ))
 
     with open("PLANS.md", "w") as f:

@@ -40,6 +40,40 @@ def test_entry_smoke(spark):
     assert {"db", "coll", "op", "count", "avg_ms"} <= set(df.columns)
 
 
+SINK_QUERIES = (
+    "log_ignored_categories", "log_ignored_sample", "log_main_ops",
+    "log_shard_main_ops", "log_ttl_ops", "log_op_stats", "log_query_hash",
+    "log_shard_query_hash", "log_plan_cache", "log_plan_multi",
+    "log_index_stats", "log_error_codes", "log_transactions",
+    "log_slow_planning", "log_app_conn_stats", "log_driver_stats",
+)
+
+
+def test_sink_queries_read_the_planner(spark, monkeypatch):
+    """Each report-sink contract query and entry() take their sink from
+    pipeline.plan_sinks, the planner run_job uses, exactly once, so the
+    oracle gate checks production's builder→stream pairing and --shards
+    wiring. Only the plans are built; no action runs."""
+    from mongo_log_parser_spark.plans import pipeline
+
+    calls = []
+    plan_sinks = pipeline.plan_sinks
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs.get("shards", False))
+        return plan_sinks(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "plan_sinks", counted)
+    queries = entrymod.queries()
+    for name in SINK_QUERIES:
+        before = len(calls)
+        queries[name](spark, "testdata/sf0.001")
+        assert calls[before:] == [name.startswith("log_shard_")], name
+    before = len(calls)
+    entrymod.entry(spark)
+    assert calls[before:] == [False]
+
+
 def test_route_partition_is_total(pages_001, streams_001):
     """oversized + ignored + kept == all pages (no line lost or double-routed)."""
     total = pages_001.count()

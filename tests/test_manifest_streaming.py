@@ -162,6 +162,31 @@ def test_resumable_job_uses_filter_config(spark, two_day_pages, tmp_path):
     assert manifest.committed_ops(spark, ingest).count() == want["ops"].count()
 
 
+def test_resumable_job_rejects_log_files(spark, tmp_path):
+    """`--resumable --logs` is refused before any Spark work: log lines carry
+    no warc_ts, so the per-day manifest cannot partition them, and the flag
+    must not be dropped without a word."""
+    from mongo_log_parser_spark import job
+
+    log = tmp_path / "mongod.log"
+    log.write_text('{"t":{"$date":"2025-07-01T00:00:00.000Z"},"s":"I","c":"NETWORK",'
+                   '"id":22943,"ctx":"listener","msg":"Connection accepted"}\n')
+    out = tmp_path / "out"
+    args = job.build_parser().parse_args(
+        ["--logs", str(log), "--out", str(out), "--resumable", "--json-only"])
+    sc = spark.sparkContext
+    group = "resumable-rejects-log-files"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="--resumable"):
+            job.run_job(spark, args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not out.exists()
+
+
 def test_streaming_windowed_counts_match_batch(spark):
     from mongo_log_parser_spark.operators import route
     from mongo_log_parser_spark.streaming import stream_job
