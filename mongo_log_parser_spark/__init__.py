@@ -3,9 +3,10 @@
 A from-scratch reimplementation of the query/data-processing capabilities of
 mhelmstetter/mongo-log-parser (reference at /root/reference, Java 17), re-expressed
 Spark-first: the reference's per-row JSON parse + synchronized HashMap accumulators
-become one declarative DataFrame program — contains-prefilter → single `from_json`
-parse → predicate router → Catalyst hash aggregates — with the two genuinely
-non-relational transforms (redact/trim, media metadata) as Arrow-batched pandas UDFs.
+become one DataFrame program — contains-prefilter → one Arrow-batched parse
+(`mapInArrow`, the grammar declared once in functions/parse.py) → predicate
+router → Catalyst hash aggregates — with the two genuinely non-relational
+transforms (redact/trim, media metadata) as Arrow-batched pandas UDFs.
 
 Layout:
   sources/     pages table reader + deterministic synthetic generator + lookups

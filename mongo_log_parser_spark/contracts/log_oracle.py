@@ -1,14 +1,14 @@
 """DuckDB oracle SQL for the log-pipeline queries.
 
 Generates DuckDB SQL that independently recomputes each log_queries.py result
-from the same pages parquet, using DuckDB's JSON functions instead of Spark's
-from_json. Pattern lists and dispatch tables are imported from the engine
-modules so both sides share one source of truth.
+from the same pages parquet, using DuckDB's JSON functions instead of the
+engine's Python tokenizer (functions/parse.py). Pattern lists and dispatch
+tables are imported from the engine modules so both sides share one source of
+truth; the parse itself is recomputed independently.
 
 Parity conventions (probed against DuckDB 1.0):
-- raw JSON subtree capture: Spark from_json-to-StringType == DuckDB
-  json_extract_string (both compact, document key order, scalar coercion —
-  e.g. `aggregate: 1` → '1')
+- raw JSON subtree capture: the tokenizer's compact re-rendering == DuckDB
+  json_extract (both compact, document key order)
 - deterministic argmax/first/last via composite VARCHAR sort keys
   (lpad(duration,20,'0')||url, ts_str||url) — identical on both engines
 - integer averages via floor division (`//`); p95 via discrete quantile_disc

@@ -1,20 +1,23 @@
-"""E1/E2 — the vectorized Arrow parse stage.
+"""E1/E2 — the vectorized Arrow parse stage, and the one declaration of the
+log-line grammar.
 
 One `mapInArrow` pass tokenizes each record's raw line exactly as the
 reference's per-row parser does (LogParserTask.java:88-137, fast extractors
-LogParser.java:1300-1332), emitting a FLAT schema of typed fields. Rationale
-(measured at sf0.1, local[32]):
+LogParser.java:1300-1332), emitting a FLAT schema of typed fields. The field
+tables below (`_ENV_FIELDS`, `_ATTR_SCALARS`, `_DERIVED_FIELDS`,
+`_CMD_NAME_KEYS`) and the kind table `_KINDS` are the only place the grammar
+is declared: `parsed_schema` (the Spark and Arrow output types) and the
+generated tokenizer `_parse_batch` both read them. Rationale (measured at
+sf0.1, local[32]):
 
 - Spark's JVM `from_json` with the full 60-field permissive schema costs
   ~4 ms/row (raw-subtree recapture forces Jackson re-serialization), and the
   optimizer's json-expression rewrite multiplies the parse per referenced
   field. Total: >60 s for 600k rows.
-- orjson in an Arrow-batched pandas stage parses + extracts the same fields
-  in ~1-2 µs/row — the exact design the graft's north_star prescribes
-  ("vectorized Arrow/pandas-UDF grok/regex stage").
-- A flat (primitive-column) output also makes the downstream persist() use
-  Spark's fast columnar cache encoding; nested structs hit the slow generic
-  path.
+- orjson in an Arrow-batched Python stage parses + extracts the same fields
+  in ~12 µs/row (scripts/parse_microbench.py times it without Spark).
+- A flat (primitive-column) output also keeps the routed parquet stage
+  columnar and prunable; nested structs would not be.
 
 Raw JSON subtrees (filter/q/$match/originatingCommand.filter) are re-rendered
 compact with document key order — byte-identical to DuckDB's json_extract and
@@ -67,11 +70,19 @@ def _dumps(v) -> str:
 
 _PASSTHROUGH = ["url", "warc_ts", "lang", "text", "shard", "node"]
 
-_ENV_FIELDS: list[tuple[str, type]] = [
-    ("ts_str", str), ("comp", str), ("ctx", str), ("msg", str),
+# kind → (Spark column type, the Python type orjson yields for it). The
+# tokenizer keeps a value only when `type(v) is` that Python type, else null.
+_KINDS = {
+    "s": (StringType(), str),
+    "l": (LongType(), int),
+    "b": (BooleanType(), bool),
+}
+
+_ENV_FIELDS: list[tuple[str, str]] = [
+    ("ts_str", "s"), ("comp", "s"), ("ctx", "s"), ("msg", "s"),
 ]
 
-# (column, kind) — kind ∈ {s: string, l: long, b: bool}
+# (column, kind, attr key)
 _ATTR_SCALARS = [
     ("a_type", "s", "type"), ("a_ns", "s", "ns"), ("a_namespace", "s", "namespace"),
     ("a_msg", "s", "msg"),
@@ -96,6 +107,11 @@ _ATTR_SCALARS = [
     ("a_user", "s", "user"), ("a_db", "s", "db"), ("a_mechanism", "s", "mechanism"),
 ]
 
+# command keys whose String value names the collection, in dispatch order
+# (LogParserTask.java:806-914); each becomes the cmd_<key> column
+_CMD_NAME_KEYS = ("find", "aggregate", "findAndModify", "update", "insert",
+                  "delete", "collection", "count", "distinct")
+
 _DERIVED_FIELDS: list[tuple[str, str]] = [
     ("has_attr", "b"), ("has_error_obj", "b"),
     ("err_code_name", "s"), ("err_code", "l"), ("err_errmsg", "s"),
@@ -103,9 +119,7 @@ _DERIVED_FIELDS: list[tuple[str, str]] = [
     ("a_txn_retry_counter", "l"),
     ("drv_name", "s"), ("drv_version", "s"), ("os_type", "s"), ("os_name", "s"),
     ("platform", "s"), ("compressors", "s"),
-    ("cmd_find", "s"), ("cmd_aggregate", "s"), ("cmd_findAndModify", "s"),
-    ("cmd_update", "s"), ("cmd_insert", "s"), ("cmd_delete", "s"),
-    ("cmd_collection", "s"), ("cmd_count", "s"), ("cmd_distinct", "s"),
+    *((f"cmd_{k}", "s") for k in _CMD_NAME_KEYS),
     ("cmd_first_other", "s"),
     ("cmd_filter_raw", "s"), ("cmd_q_raw", "s"), ("match_raw", "s"),
     ("orig_filter_raw", "s"),
@@ -113,30 +127,15 @@ _DERIVED_FIELDS: list[tuple[str, str]] = [
     ("orig_has_changestream", "b"),
 ]
 
-_TYPE = {"s": StringType(), "l": LongType(), "b": BooleanType()}
-
-
 def parsed_schema(input_schema: StructType, extra_cols: tuple[str, ...] = ()) -> StructType:
     fields = [f for f in input_schema.fields if f.name in _PASSTHROUGH]
-    fields += [StructField(n, StringType()) for n, _ in _ENV_FIELDS]
+    fields += [StructField(n, _KINDS[k][0]) for n, k in _ENV_FIELDS]
     fields += [StructField("cmd_keys", ArrayType(StringType()))]
-    fields += [StructField(n, _TYPE[k]) for n, k, _ in _ATTR_SCALARS]
-    fields += [StructField(n, _TYPE[k]) for n, k in _DERIVED_FIELDS]
+    fields += [StructField(n, _KINDS[k][0]) for n, k, _ in _ATTR_SCALARS]
+    fields += [StructField(n, _KINDS[k][0]) for n, k in _DERIVED_FIELDS]
     by_name = {f.name: f for f in input_schema.fields}
     fields += [by_name[c] for c in extra_cols]
     return StructType(fields)
-
-
-def _S(v):
-    return v if isinstance(v, str) else None
-
-
-def _L(v):
-    return v if isinstance(v, int) and not isinstance(v, bool) else None
-
-
-def _B(v):
-    return v if isinstance(v, bool) else None
 
 
 def _fmt_tag(tag: dict) -> str:
@@ -180,172 +179,25 @@ def _node_type(tags) -> str:
     return ""
 
 
-_ATTR_COMPILED = [(n, {"s": _S, "l": _L, "b": _B}[k], key) for n, k, key in _ATTR_SCALARS]
 _ALL_FIELD_NAMES = ([n for n, _ in _ENV_FIELDS] + ["cmd_keys"]
                     + [n for n, _, _k in _ATTR_SCALARS] + [n for n, _ in _DERIVED_FIELDS])
-
-
-def _parse_row(line: str, app: dict) -> None:  # noqa: C901 — one grammar, one parser
-    """`app` maps column name → that column's list.append, prebound once per
-    Arrow batch (parse_lines) — saves two lookups per field per row on the
-    hottest loop in the engine."""
-    try:
-        jo = _loads(line)
-        if not isinstance(jo, dict):
-            jo = None
-    except Exception:
-        jo = None  # parse errors are skipped, LogParserTask.java:127-137
-    if jo is None:
-        for name in _ALL_FIELD_NAMES:
-            app[name](None)
-        return
-
-    t = jo.get("t")
-    app["ts_str"](_S(t.get("$date")) if isinstance(t, dict) else None)
-    app["comp"](_S(jo.get("c")))
-    app["ctx"](_S(jo.get("ctx")))
-    app["msg"](_S(jo.get("msg")))
-
-    attr = jo.get("attr")
-    has_attr = isinstance(attr, dict)
-    a = attr if has_attr else {}
-    a_get = a.get
-    for name, fn, key in _ATTR_COMPILED:
-        app[name](fn(a_get(key)))
-    app["has_attr"](has_attr)
-
-    err = a.get("error")
-    if isinstance(err, dict):
-        app["has_error_obj"](True)
-        app["err_code_name"](_S(err.get("codeName")))
-        app["err_code"](_L(err.get("code")))
-        app["err_errmsg"](_S(err.get("errmsg")))
-    else:
-        app["has_error_obj"](False)
-        app["err_code_name"](None)
-        app["err_code"](None)
-        app["err_errmsg"](None)
-
-    # storage.bytesRead else storage.data.bytesRead (LogParserTask.java:1015-1038)
-    st = a.get("storage")
-    br = bw = None
-    if isinstance(st, dict):
-        br, bw = _L(st.get("bytesRead")), _L(st.get("bytesWritten"))
-        d = st.get("data")
-        if isinstance(d, dict):
-            br = br if br is not None else _L(d.get("bytesRead"))
-            bw = bw if bw is not None else _L(d.get("bytesWritten"))
-    app["a_bytes_read"](br)
-    app["a_bytes_written"](bw)
-
-    params = a.get("parameters")
-    app["a_txn_retry_counter"](_L(params.get("txnRetryCounter")) if isinstance(params, dict) else None)
-
-    doc = a.get("doc")
-    drv = doc.get("driver") if isinstance(doc, dict) else None
-    osd = doc.get("os") if isinstance(doc, dict) else None
-    app["drv_name"](_S(drv.get("name")) if isinstance(drv, dict) else None)
-    app["drv_version"](_S(drv.get("version")) if isinstance(drv, dict) else None)
-    app["os_type"](_S(osd.get("type")) if isinstance(osd, dict) else None)
-    app["os_name"](_S(osd.get("name")) if isinstance(osd, dict) else None)
-    app["platform"](_S(doc.get("platform")) if isinstance(doc, dict) else None)
-    comps = a.get("negotiatedCompressors")
-    app["compressors"](
-        ",".join(sorted(c for c in comps if isinstance(c, str))) if isinstance(comps, list) else None
-    )
-
-    cmd = a.get("command")
-    if isinstance(cmd, dict):
-        app["cmd_keys"](list(cmd.keys()))  # document order — dispatch source
-        first_other = None
-        for k in cmd.keys():  # processOtherOperations, LogParserTask.java:921-948
-            if k.startswith("_shardsv") or k in _ADMIN_SET:
-                first_other = k
-                break
-        app["cmd_first_other"](first_other)
-        for key in ("find", "aggregate", "findAndModify", "update", "insert",
-                    "delete", "collection", "count", "distinct"):
-            # collection-name override requires a String value (instanceof
-            # String guard, LogParserTask.java:806-914)
-            app[f"cmd_{key}"](_S(cmd.get(key)))
-        f = cmd.get("filter")
-        app["cmd_filter_raw"](_dumps(f) if isinstance(f, dict) else None)
-        q = cmd.get("q")
-        app["cmd_q_raw"](_dumps(q) if isinstance(q, dict) else None)
-        match = None
-        pipe = cmd.get("pipeline")
-        if isinstance(pipe, list):
-            for stage in pipe:  # first $match with an object value (E13)
-                if isinstance(stage, dict):
-                    m = stage.get("$match")
-                    if isinstance(m, dict):
-                        match = _dumps(m)
-                        break
-        app["match_raw"](match)
-    else:
-        app["cmd_keys"](None)
-        app["cmd_first_other"](None)
-        for key in ("find", "aggregate", "findAndModify", "update", "insert",
-                    "delete", "collection", "count", "distinct"):
-            app[f"cmd_{key}"](None)
-        app["cmd_filter_raw"](None)
-        app["cmd_q_raw"](None)
-        app["match_raw"](None)
-
-    orig = a.get("originatingCommand")
-    orig = orig if isinstance(orig, dict) else None
-    of = orig.get("filter") if orig else None
-    app["orig_filter_raw"](_dumps(of) if isinstance(of, dict) else None)
-    ocs = False
-    if orig and isinstance(orig.get("pipeline"), list):
-        ocs = any(isinstance(s, dict) and "$changeStream" in s for s in orig["pipeline"])
-    app["orig_has_changestream"](ocs)
-
-    # read preference: command value, originatingCommand fallback when no mode
-    # was resolved (LogParserTask.java:446-558)
-    mode = None
-    tags_fmt = None
-    rp = cmd.get("$readPreference") if isinstance(cmd, dict) else None
-    if isinstance(rp, str):
-        mode = rp
-    elif isinstance(rp, dict):
-        mode = _S(rp.get("mode"))
-        if "tags" in rp:
-            tags_fmt = _fmt_tags(rp.get("tags"))
-    orp = orig.get("$readPreference") if orig else None
-    if mode is None:
-        if isinstance(orp, str):
-            mode = orp
-        elif isinstance(orp, dict):
-            mode = _S(orp.get("mode"))
-    if tags_fmt is None and isinstance(orp, dict) and "tags" in orp:
-        tags_fmt = _fmt_tags(orp.get("tags"))
-    app["rp_mode"](mode)
-    app["rp_tags"](tags_fmt)
-    tags_src = rp.get("tags") if isinstance(rp, dict) and "tags" in rp else (
-        orp.get("tags") if isinstance(orp, dict) and "tags" in orp else None
-    )
-    app["rp_node_type"](_node_type(tags_src) if tags_src is not None else None)
-
-
-_CHECK = {"s": "str", "l": "int", "b": "bool"}
 
 
 def _gen_batch_source() -> str:
     """Source for the generated batch tokenizer `_parse_batch(texts, out, skips)`.
 
-    Same grammar as `_parse_row` (which stays as the readable reference
-    implementation — tests/test_parse_codegen.py proves the two identical on
-    real + adversarial rows), but the whole Arrow batch is one generated
-    function: every column's `.append` is bound to a local once per batch and
-    the `_S/_L/_B` sanitizers are inlined as `type(v) is X` expressions. That
-    removes a dict lookup + a Python helper call per field per row on the
-    hottest loop in the engine — measured 20.1 → 12.4 µs/row (−39%) on sf0.01
-    rows + garbage probes (min of 7 interleaved). The generated parts are
-    driven by the same _ATTR_SCALARS table as `_parse_row`, so the two cannot
-    drift on the scalar fields; `type(v) is int` == `_L` exactly because
-    orjson only ever yields bool/int/float/str/list/dict/None and
-    `type(True) is int` is False."""
+    The whole Arrow batch is one generated function: every column's
+    `.append` is bound to a local once per batch and each kind's sanitizer is
+    inlined as a `type(v) is X` expression (X from `_KINDS`). That removes a
+    dict lookup + a Python helper call per field per row on the hottest loop
+    in the engine — measured 20.1 → 12.4 µs/row (−39%) against the per-row
+    reference parser on sf0.01 rows + garbage probes (min of 7 interleaved).
+    The attr scalars and the cmd_<key> columns are generated from
+    `_ATTR_SCALARS` and `_CMD_NAME_KEYS`. `type(v) is int` rejects bools
+    because orjson only ever yields bool/int/float/str/list/dict/None and
+    `type(True) is int` is False. tests/parse_reference.py keeps an
+    independent per-row parser, and tests/test_parse_codegen.py proves the
+    two value-identical on real + adversarial rows."""
     L: list[str] = []
     a = L.append
     a("def _parse_batch(texts, out, skips=None):")
@@ -389,7 +241,7 @@ def _gen_batch_source() -> str:
     a("        ap_has_attr(has_attr)")
     a("        a_get = attr.get if has_attr else _EMPTY_GET")
     for name, kind, key in _ATTR_SCALARS:
-        a(f"        v = a_get({key!r}); ap_{name}(v if type(v) is {_CHECK[kind]} else None)")
+        a(f"        v = a_get({key!r}); ap_{name}(v if type(v) is {_KINDS[kind][1].__name__} else None)")
     # error object
     a("        err = a_get('error')")
     a("        if type(err) is dict:")
@@ -455,8 +307,7 @@ def _gen_batch_source() -> str:
     a("                    break")
     a("            ap_cmd_first_other(first_other)")
     a("            c_get = cmd.get")
-    for key in ("find", "aggregate", "findAndModify", "update", "insert",
-                "delete", "collection", "count", "distinct"):
+    for key in _CMD_NAME_KEYS:
         a(f"            v = c_get({key!r}); ap_cmd_{key}(v if type(v) is str else None)")
     a("            f = c_get('filter'); ap_cmd_filter_raw(dumps(f) if type(f) is dict else None)")
     a("            q = c_get('q'); ap_cmd_q_raw(dumps(q) if type(q) is dict else None)")
@@ -473,8 +324,7 @@ def _gen_batch_source() -> str:
     a("        else:")
     a("            cmd = None")
     a("            ap_cmd_keys(None); ap_cmd_first_other(None)")
-    for key in ("find", "aggregate", "findAndModify", "update", "insert",
-                "delete", "collection", "count", "distinct"):
+    for key in _CMD_NAME_KEYS:
         a(f"            ap_cmd_{key}(None)")
     a("            ap_cmd_filter_raw(None); ap_cmd_q_raw(None); ap_match_raw(None)")
     # originatingCommand (E13)
@@ -546,21 +396,20 @@ def parse_lines(df: DataFrame, extra_cols: tuple[str, ...] = (),
     (see _gen_batch_source): one pass per row for cache locality — a
     column-at-a-time comprehension layout measured 2.3x SLOWER because 75
     passes over the batch's scattered dicts thrash the cache — with appends
-    as locals and sanitizers inlined (20.1 → 12.4 µs/row vs the _parse_row
-    loop; an earlier tuple-row + zip-transpose variant was also slower)."""
+    as locals and sanitizers inlined (20.1 → 12.4 µs/row vs the per-row
+    reference parser; an earlier tuple-row + zip-transpose variant was also
+    slower)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     schema = parsed_schema(df.schema, extra_cols=tuple(extra_cols))
     all_out = _ALL_FIELD_NAMES
     out_names = [f.name for f in schema.fields]
-    generated = set(all_out)
+    # Arrow type of each generated column, from the same schema Spark checks
+    # the batches against; passthrough columns keep the input batch's column
+    generated = {n: to_arrow_type(schema[n].dataType) for n in all_out}
 
     def run(batches):
         import pyarrow as pa
-
-        pa_type = {"s": pa.string(), "l": pa.int64(), "b": pa.bool_()}
-        types = {n: pa_type[k] for n, k, _ in _ATTR_SCALARS}
-        types.update({n: pa_type[k] for n, k in _DERIVED_FIELDS})
-        types.update({n: pa.string() for n, _ in _ENV_FIELDS})
-        types["cmd_keys"] = pa.list_(pa.string())
 
         for batch in batches:
             out: dict[str, list] = {n: [] for n in all_out}
@@ -572,7 +421,7 @@ def parse_lines(df: DataFrame, extra_cols: tuple[str, ...] = (),
                      if skip_col is not None else None)
             _parse_batch(texts, out, skips)
             cols = [
-                pa.array(out[n], type=types[n]) if n in generated else batch.column(n)
+                pa.array(out[n], type=generated[n]) if n in generated else batch.column(n)
                 for n in out_names
             ]
             yield pa.RecordBatch.from_arrays(cols, out_names)

@@ -1,7 +1,7 @@
 """Pre-parse filter & routing predicates (reference F1-F8).
 
 These are cheap substring predicates evaluated on the raw line BEFORE the
-expensive `from_json` stage — the Spark restatement of the reference's
+Python parse stage (parse.parse_lines) — the Spark restatement of the reference's
 cheap-predicate-first hand-optimization (LogParser.java:645-649, 896-932).
 Everything here is a Column expression → whole-stage codegen, no Python.
 

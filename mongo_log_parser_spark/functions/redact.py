@@ -25,8 +25,6 @@ import json
 import re
 
 _DIGITS = re.compile(r"\d")
-# REGEX_SPECIAL_CHARS — everything EXCEPT regex metacharacters ^$.*+?()[]{}|\
-_NON_META = re.compile(r"[^\^\$\.\*\+\?\(\)\[\]\{\}\|\\]")
 _USER_DATA = re.compile(r"[a-zA-Z0-9_\-/]+")
 _ATLAS = re.compile(
     r"atlas-([a-zA-Z0-9]+)(-shard-[0-9]+-[0-9]+\.)([a-zA-Z0-9-]+)(\.mongodb\.net)(:[0-9]+)?"

@@ -14,7 +14,10 @@ the manifest row is the snapshot commit):
   route.kept_rows(route.routed_parse(day)) and ops is route.extract_ops over
   the written kept. The manifest counters are observe() metrics on the
   write jobs: rows_in/oversized over the day's pages, ignored/kept over the
-  router's is_ignored flag, ops over the ops write;
+  router's is_ignored flag, ops over the ops write. rows_in counts the pages
+  with a non-null text, the lines the router sees (a null text is no line:
+  the router drops it, as the oracle's q_route_counts does), so every
+  committed row holds rows_in == oversized + ignored + kept;
 - each attempt writes its routed outputs to a UNIQUE content-addressed
   location out_dir/{kept,ops}/day=<d>/attempt=<run_id>/ with plain writes —
   nothing is ever renamed or replaced, so the scheme is safe on object
@@ -165,12 +168,13 @@ def run_resumable(spark: SparkSession, pages_path: str, out_dir: str,
         # the counters ride the WRITE jobs as observe() metrics, so the commit
         # is exactly 2 jobs per partition (kept write incl. the one Arrow
         # parse, then ops write off the committed kept) with no count
-        # re-reads: rows_in/oversized over the day's pages; ignored/kept over
-        # the router's own is_ignored flag, so no predicate runs twice
+        # re-reads: rows_in (non-null text lines)/oversized over the day's
+        # pages; ignored/kept over the router's own is_ignored flag, so no
+        # predicate runs twice
         obs_in, obs_route, obs_ops = Observation(), Observation(), Observation()
         observed = day_pages.observe(
             obs_in,
-            F.count(F.lit(1)).alias("rows_in"),
+            F.count(text).alias("rows_in"),
             F.sum(prefilter.is_oversized(text).cast("long")).alias("oversized"),
         )
         routed = route.routed_parse(observed, ignore_patterns=ignore_patterns).observe(

@@ -5,7 +5,7 @@ parquet filter/column pushdown, and the salted two-phase aggregate shape."""
 
 from __future__ import annotations
 
-import re
+import os
 
 from pyspark.sql import functions as F
 
@@ -14,11 +14,15 @@ from mongo_log_parser_spark.plans import pipeline
 from mongo_log_parser_spark.session import build_session
 
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+NOTES = "<!-- hand-written notes: scripts/gen_plans.py keeps everything below -->"
+
+
 def fmt(df, max_lines=40):
-    s = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted") \
-        if False else df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    lines = s.splitlines()
+    s = df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    # paths relative to the checkout, so the file does not depend on where it lives
+    lines = s.replace(f"file:{_ROOT}/", "file:").splitlines()
     return "\n".join(lines[:max_lines]) + ("\n  ..." if len(lines) > max_lines else "")
 
 
@@ -78,11 +82,18 @@ def main():
         fmt(shard_sinks["shard_main_ops"], 34),
     ))
 
+    # the hand-written notes after the NOTES marker are carried over as they are
+    notes = ""
+    if os.path.exists("PLANS.md"):
+        with open("PLANS.md") as f:
+            text = f.read()
+        notes = text[text.index(NOTES):] if NOTES in text else ""
     with open("PLANS.md", "w") as f:
         f.write("# PLANS — physical-plan evidence (`explain('formatted')`, sf0.001, local[8])\n\n")
         f.write("Generated by scripts/gen_plans.py; regenerate after plan-affecting changes.\n\n")
         for title, note, plan in sections:
             f.write(f"## {title}\n\n{note}\n\n```\n{plan}\n```\n\n")
+        f.write(notes)
     spark.stop()
     print("PLANS.md written")
 

@@ -128,6 +128,97 @@ def test_resumable_routes_each_day_once(spark, two_day_pages, tmp_path, monkeypa
     assert len(calls) == 2
 
 
+def _oracle_route_counts(pages_dir: str) -> dict[str, int]:
+    """{oversized, ignored, kept, rows_in} from the DuckDB q_route_counts."""
+    import os
+
+    import duckdb
+
+    from mongo_log_parser_spark.contracts import log_oracle
+
+    con = duckdb.connect()
+    try:
+        rows = con.sql(log_oracle.q_route_counts(
+            os.path.join(pages_dir, "*.parquet"))).fetchall()
+    finally:
+        con.close()
+    counts = {stream: int(n) for stream, n in rows}
+    counts["rows_in"] = sum(counts.values())
+    return counts
+
+
+def _manifest_totals(spark, out_dir: str) -> dict[str, int]:
+    from mongo_log_parser_spark.plans import manifest
+
+    cols = ("rows_in", "oversized", "ignored", "kept")
+    row = manifest.committed_manifest(spark, out_dir).agg(
+        *[F.sum(c).alias(c) for c in cols]).collect()[0]
+    return {c: row[c] for c in cols}
+
+
+def test_resumable_counts_null_text_pages(spark, two_day_pages, tmp_path):
+    """A pages row whose text is null is no log line: the router drops it,
+    so rows_in must not count it, or the day's committed row breaks
+    rows_in == oversized + ignored + kept."""
+    from mongo_log_parser_spark.plans import manifest
+
+    pages = spark.read.parquet(two_day_pages)
+    day1 = pages.orderBy("warc_ts").limit(2)
+    blanks = day1.limit(1).withColumn("text", F.lit(None).cast("string")).unionByName(
+        day1.offset(1).withColumn("text", F.lit("")))
+    path = str(tmp_path / "pages")
+    pages.unionByName(blanks).write.parquet(path)
+    out = str(tmp_path / "ingest")
+    assert manifest.run_resumable(spark, path, out)["days_processed"] == 2
+    for r in manifest.read_manifest(spark, out).collect():
+        assert r["rows_in"] == r["oversized"] + r["ignored"] + r["kept"], r["day"]
+    assert _manifest_totals(spark, out) == _oracle_route_counts(path)
+
+
+def test_resumable_survives_killed_python_worker(spark, two_day_pages, tmp_path,
+                                                 monkeypatch):
+    """A Python worker that dies in the middle of day 2's kept write fails
+    the ingest without committing day 2; a rerun commits it, and the
+    committed counters equal the oracle's route counts."""
+    from py4j.protocol import Py4JJavaError
+
+    from mongo_log_parser_spark.operators import route
+    from mongo_log_parser_spark.plans import manifest
+
+    routed_parse = route.routed_parse
+    days = []
+
+    def crash_on_day_2(pages, **kwargs):
+        routed = routed_parse(pages, **kwargs)
+        days.append(routed)
+        if len(days) < 2:
+            return routed
+
+        def die(batches):
+            import os
+
+            for _batch in batches:
+                os._exit(1)
+            yield from ()
+
+        return routed.mapInArrow(die, routed.schema)
+
+    out = str(tmp_path / "ingest")
+    monkeypatch.setattr(route, "routed_parse", crash_on_day_2)
+    with pytest.raises(Py4JJavaError, match="Python worker exited unexpectedly"):
+        manifest.run_resumable(spark, two_day_pages, out)
+    assert len(days) == 2
+    first_day = sorted(manifest.completed_days(spark, out))
+    assert len(first_day) == 1
+    assert manifest.read_manifest(spark, out).count() == 1
+
+    monkeypatch.setattr(route, "routed_parse", routed_parse)
+    stats = manifest.run_resumable(spark, two_day_pages, out)
+    assert (stats["days_already_done"], stats["days_processed"]) == (1, 1)
+    assert stats["processed"][0] not in first_day
+    assert _manifest_totals(spark, out) == _oracle_route_counts(two_day_pages)
+
+
 def test_resumable_job_uses_filter_config(spark, two_day_pages, tmp_path):
     """`--resumable --config` commits kept/ops routed with the config's
     ignore patterns, as the report is: the committed kept rows and the

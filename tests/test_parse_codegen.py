@@ -1,7 +1,7 @@
 """The generated batch tokenizer (_parse_batch) must be value-identical to
-the readable reference implementation (_parse_row) on every field — real
-generator rows, adversarial type-confusion probes, garbage, and the skip
-path. This is the guard for the codegen optimization (round 6): any drift
+the readable reference implementation (tests/parse_reference.py) on every
+field — real generator rows, adversarial type-confusion probes, garbage, and
+the skip path. This is the guard for the codegen optimization (round 6): any drift
 between the generated source and the reference grammar fails here before it
 can reach the oracle gate."""
 from __future__ import annotations
@@ -9,62 +9,7 @@ from __future__ import annotations
 import pytest
 
 from mongo_log_parser_spark.functions import parse as P
-
-# Adversarial rows: every branch's type guards poked with wrong-typed values.
-ADVERSARIAL = [
-    b"",
-    b"not json",
-    b"[1,2,3]",
-    b'"str"',
-    b"{bad",
-    b"null",
-    b"123",
-    b'{"t":null}',
-    b'{"t":{"$date":5},"c":1,"ctx":true,"msg":{},"attr":[]}',
-    b'{"t":{"$date":"2024-01-01T00:00:00.000+00:00"},"c":"CMD","ctx":"conn1",'
-    b'"msg":"Slow query","attr":{"type":"command","ns":"db.c","durationMillis":5}}',
-    # command with non-string collection values, $readPreference tag variants
-    b'{"attr":{"command":{"find":7,"$readPreference":{"mode":5,'
-    b'"tags":[{"a":"b"},{"nodeType":"analytics"}]}},'
-    b'"storage":{"data":{"bytesRead":"x"}}}}',
-    # error/storage/doc/compressors/orig/parameters all wrong-typed or partial
-    b'{"attr":{"error":{"code":"x","codeName":1},'
-    b'"storage":{"bytesRead":1,"data":{"bytesWritten":2}},'
-    b'"doc":{"driver":{"name":5},"os":"x","platform":"p"},'
-    b'"negotiatedCompressors":["z",1,"a"],'
-    b'"originatingCommand":{"filter":{"b":1},"pipeline":[{"$changeStream":{}}],'
-    b'"$readPreference":"secondary"},"parameters":{"txnRetryCounter":true}}}',
-    # pipeline $match scanning, db-level aggregate, orig rp fallback with tags
-    b'{"attr":{"command":{"aggregate":"1","pipeline":[1,{"$match":5},'
-    b'{"$match":{"a":1}}],"q":{"x":[1]},"$readPreference":{"tags":'
-    b'{"nodeType":"voting"}}},"originatingCommand":{"pipeline":"x",'
-    b'"$readPreference":{"mode":"nearest","tags":[]}}}}',
-    # admin op dispatch + _shardsv prefix
-    b'{"attr":{"command":{"_shardsvrDropCollection":"c","drop":"d"}}}',
-    b'{"attr":{"command":{"drop":"d","find":"f"}}}',
-    # bool-vs-int guards: every long field fed a bool, every bool an int
-    b'{"attr":{"durationMillis":true,"replanned":1,"ok":false,'
-    b'"connectionId":true,"fromMultiPlanner":0}}',
-    None,  # null text cell
-]
-
-
-def _run_reference(texts, skips=None):
-    out = {n: [] for n in P._ALL_FIELD_NAMES}
-    app = {n: out[n].append for n in P._ALL_FIELD_NAMES}
-    appends = list(app.values())
-    rows = texts if skips is None else zip(texts, skips)
-    for item in rows:
-        if skips is None:
-            line, sk = item, False
-        else:
-            line, sk = item
-        if sk:
-            for ap in appends:
-                ap(None)
-        else:
-            P._parse_row(line if isinstance(line, bytes) else b"", app)
-    return out
+from tests.parse_reference import ADVERSARIAL, grammar_rows, run_reference
 
 
 def _run_generated(texts, skips=None):
@@ -73,25 +18,13 @@ def _run_generated(texts, skips=None):
     return out
 
 
-def _real_rows(n=2000):
-    """Rows from the deterministic generator grammar (the same distribution
-    the bench and oracle data use) — exercises the hot paths."""
-    import numpy as np
-
-    from mongo_log_parser_spark.sources import datagen
-
-    rng = np.random.default_rng(np.random.PCG64(7))
-    _urls, _ts, _htmls, texts, _langs, _hosts = datagen._build_rows(n, rng)
-    return [t.encode("utf-8") for t in texts]
-
-
 @pytest.fixture(scope="module")
 def corpus():
-    return _real_rows() + ADVERSARIAL * 3
+    return grammar_rows() + ADVERSARIAL * 3
 
 
 def test_generated_matches_reference(corpus):
-    ref = _run_reference(corpus)
+    ref = run_reference(corpus)
     gen = _run_generated(corpus)
     assert set(ref) == set(gen)
     for k in P._ALL_FIELD_NAMES:
@@ -100,7 +33,7 @@ def test_generated_matches_reference(corpus):
 
 def test_generated_matches_reference_skip_path(corpus):
     skips = [(i % 3 == 0) for i in range(len(corpus))]
-    ref = _run_reference(corpus, skips)
+    ref = run_reference(corpus, skips)
     gen = _run_generated(corpus, skips)
     for k in P._ALL_FIELD_NAMES:
         assert ref[k] == gen[k], f"field {k} diverged on skip path"
