@@ -5,10 +5,11 @@ One `mapInArrow` pass tokenizes each record's raw line exactly as the
 reference's per-row parser does (LogParserTask.java:88-137, fast extractors
 LogParser.java:1300-1332), emitting a FLAT schema of typed fields. The field
 tables below (`_ENV_FIELDS`, `_ATTR_SCALARS`, `_DERIVED_FIELDS`,
-`_CMD_NAME_KEYS`) and the kind table `_KINDS` are the only place the grammar
-is declared: `parsed_schema` (the Spark and Arrow output types) and the
-generated tokenizer `_parse_batch` both read them. Rationale (measured at
-sf0.1, local[32]):
+`_CMD_NAME_KEYS`) are the only place the grammar is declared: `parsed_schema`
+maps their kinds to Spark types through `_KINDS` (the Arrow output types
+follow from it), and the generated tokenizer `_parse_batch` emits the attr
+scalars and the cmd_<key> columns from the same tables. Rationale (measured
+at sf0.1, local[32]):
 
 - Spark's JVM `from_json` with the full 60-field permissive schema costs
   ~4 ms/row (raw-subtree recapture forces Jackson re-serialization), and the
@@ -70,13 +71,8 @@ def _dumps(v) -> str:
 
 _PASSTHROUGH = ["url", "warc_ts", "lang", "text", "shard", "node"]
 
-# kind → (Spark column type, the Python type orjson yields for it). The
-# tokenizer keeps a value only when `type(v) is` that Python type, else null.
-_KINDS = {
-    "s": (StringType(), str),
-    "l": (LongType(), int),
-    "b": (BooleanType(), bool),
-}
+# kind → Spark column type
+_KINDS = {"s": StringType(), "l": LongType(), "b": BooleanType()}
 
 _ENV_FIELDS: list[tuple[str, str]] = [
     ("ts_str", "s"), ("comp", "s"), ("ctx", "s"), ("msg", "s"),
@@ -129,10 +125,10 @@ _DERIVED_FIELDS: list[tuple[str, str]] = [
 
 def parsed_schema(input_schema: StructType, extra_cols: tuple[str, ...] = ()) -> StructType:
     fields = [f for f in input_schema.fields if f.name in _PASSTHROUGH]
-    fields += [StructField(n, _KINDS[k][0]) for n, k in _ENV_FIELDS]
+    fields += [StructField(n, _KINDS[k]) for n, k in _ENV_FIELDS]
     fields += [StructField("cmd_keys", ArrayType(StringType()))]
-    fields += [StructField(n, _KINDS[k][0]) for n, k, _ in _ATTR_SCALARS]
-    fields += [StructField(n, _KINDS[k][0]) for n, k in _DERIVED_FIELDS]
+    fields += [StructField(n, _KINDS[k]) for n, k, _ in _ATTR_SCALARS]
+    fields += [StructField(n, _KINDS[k]) for n, k in _DERIVED_FIELDS]
     by_name = {f.name: f for f in input_schema.fields}
     fields += [by_name[c] for c in extra_cols]
     return StructType(fields)
@@ -188,10 +184,10 @@ def _gen_batch_source() -> str:
 
     The whole Arrow batch is one generated function: every column's
     `.append` is bound to a local once per batch and each kind's sanitizer is
-    inlined as a `type(v) is X` expression (X from `_KINDS`). That removes a
-    dict lookup + a Python helper call per field per row on the hottest loop
-    in the engine — measured 20.1 → 12.4 µs/row (−39%) against the per-row
-    reference parser on sf0.01 rows + garbage probes (min of 7 interleaved).
+    inlined as a `type(v) is X` expression. That removes a dict lookup + a
+    Python helper call per field per row on the hottest loop in the engine —
+    measured 20.1 → 12.4 µs/row (−39%) against the per-row reference parser
+    on sf0.01 rows + garbage probes (min of 7 interleaved).
     The attr scalars and the cmd_<key> columns are generated from
     `_ATTR_SCALARS` and `_CMD_NAME_KEYS`. `type(v) is int` rejects bools
     because orjson only ever yields bool/int/float/str/list/dict/None and
@@ -240,8 +236,9 @@ def _gen_batch_source() -> str:
     a("        has_attr = type(attr) is dict")
     a("        ap_has_attr(has_attr)")
     a("        a_get = attr.get if has_attr else _EMPTY_GET")
+    py_type = {"s": "str", "l": "int", "b": "bool"}  # what orjson yields per kind
     for name, kind, key in _ATTR_SCALARS:
-        a(f"        v = a_get({key!r}); ap_{name}(v if type(v) is {_KINDS[kind][1].__name__} else None)")
+        a(f"        v = a_get({key!r}); ap_{name}(v if type(v) is {py_type[kind]} else None)")
     # error object
     a("        err = a_get('error')")
     a("        if type(err) is dict:")

@@ -15,7 +15,6 @@ from mongo_log_parser_spark.session import build_session
 
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-NOTES = "<!-- hand-written notes: scripts/gen_plans.py keeps everything below -->"
 
 
 def fmt(df, max_lines=40):
@@ -82,18 +81,12 @@ def main():
         fmt(shard_sinks["shard_main_ops"], 34),
     ))
 
-    # the hand-written notes after the NOTES marker are carried over as they are
-    notes = ""
-    if os.path.exists("PLANS.md"):
-        with open("PLANS.md") as f:
-            text = f.read()
-        notes = text[text.index(NOTES):] if NOTES in text else ""
     with open("PLANS.md", "w") as f:
         f.write("# PLANS — physical-plan evidence (`explain('formatted')`, sf0.001, local[8])\n\n")
-        f.write("Generated by scripts/gen_plans.py; regenerate after plan-affecting changes.\n\n")
+        f.write("Generated by scripts/gen_plans.py; regenerate after plan-affecting changes. "
+                "Hand-written plan notes are in [PLANS_NOTES.md](PLANS_NOTES.md).\n\n")
         for title, note, plan in sections:
             f.write(f"## {title}\n\n{note}\n\n```\n{plan}\n```\n\n")
-        f.write(notes)
     spark.stop()
     print("PLANS.md written")
 

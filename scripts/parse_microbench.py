@@ -2,21 +2,21 @@
 """Spark-free microbenchmark of the parse layer's tokenizer.
 
 Times `parse._parse_batch` (the generated tokenizer that `parse_lines` runs
-on every Arrow batch) over the deterministic datagen grammar rows plus the
-adversarial rows of tests/parse_reference.py, single-threaded, and prints one
-JSON line with the min-of-K µs/row. `--reference` also times the per-row
-reference parser on the same corpus.
+on every Arrow batch), then the per-row reference parser of
+tests/parse_reference.py, over 20,000 deterministic datagen grammar rows plus
+the adversarial rows, single-threaded, and prints one JSON line with the
+min-of-7 µs/row of each.
 
-    python scripts/parse_microbench.py                # 20k rows, min of 7
-    python scripts/parse_microbench.py --rows 5000 --repeat 3 --reference
+    python scripts/parse_microbench.py
 
 For an A/B, run it from both checkouts in turn, alternating which runs first,
-and compare the parent's spread with the change's median.
+and compare the parent's spread with the change's median. The min-of-7 is a
+steady-state figure; perfbench's traced `parse.us_per_row` is the in-engine
+one.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -27,6 +27,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from mongo_log_parser_spark.functions import parse  # noqa: E402
 from tests.parse_reference import ADVERSARIAL, grammar_rows, run_reference  # noqa: E402
 
+ROWS = 20000
+REPEAT = 7
+
 
 def _generated(texts):
     out = {n: [] for n in parse._ALL_FIELD_NAMES}
@@ -34,32 +37,26 @@ def _generated(texts):
     return out
 
 
-def time_us_per_row(fn, texts, repeat: int) -> list[float]:
-    """µs/row of each of `repeat` full passes of `fn` over `texts`."""
+def time_us_per_row(fn, texts) -> list[float]:
+    """µs/row of each of REPEAT full passes of `fn` over `texts`."""
     runs = []
-    for _ in range(repeat):
+    for _ in range(REPEAT):
         t0 = time.perf_counter()
         fn(texts)
         runs.append((time.perf_counter() - t0) * 1e6 / len(texts))
     return runs
 
 
-def main(argv=None) -> dict:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--rows", type=int, default=20000, help="datagen grammar rows")
-    ap.add_argument("--repeat", type=int, default=7, help="passes; the min is reported")
-    ap.add_argument("--reference", action="store_true",
-                    help="also time the per-row reference parser")
-    args = ap.parse_args(argv)
-
-    texts = grammar_rows(args.rows) + ADVERSARIAL * 3
-    result = {"rows": len(texts), "repeat": args.repeat}
-    runs = time_us_per_row(_generated, texts, args.repeat)
-    result["parse_batch_us_per_row"] = round(min(runs), 3)
-    result["parse_batch_runs"] = [round(r, 3) for r in runs]
-    if args.reference:
-        ref = time_us_per_row(run_reference, texts, args.repeat)
-        result["reference_us_per_row"] = round(min(ref), 3)
+def main() -> dict:
+    texts = grammar_rows(ROWS) + ADVERSARIAL * 3
+    runs = time_us_per_row(_generated, texts)
+    result = {
+        "rows": len(texts),
+        "repeat": REPEAT,
+        "parse_batch_us_per_row": round(min(runs), 3),
+        "parse_batch_runs": [round(r, 3) for r in runs],
+        "reference_us_per_row": round(min(time_us_per_row(run_reference, texts)), 3),
+    }
     print(json.dumps(result))
     return result
 

@@ -2,9 +2,9 @@
 generated tokenizer is checked and timed on.
 
 `_parse_row` parses one line with plain dict lookups and the `_S/_L/_B`
-sanitizers. Its command-key tuples are literals, written independently of
-the field tables that drive `parse._gen_batch_source`, so a drift in those
-tables or in the generator shows up as a field mismatch in
+sanitizers. Its command-key tuples are literals and its kind → sanitizer
+map is its own, written independently of `parse._CMD_NAME_KEYS` and the
+generator, so a drift in either shows up as a field mismatch in
 tests/test_parse_codegen.py. scripts/parse_microbench.py times both parsers
 on the same corpus.
 """

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongo_log_parser_spark.sources import datagen
+from perfbench.check import expected_route_counts
 
 
 def test_resumable_manifest_skips_completed_days(spark):
@@ -128,25 +129,6 @@ def test_resumable_routes_each_day_once(spark, two_day_pages, tmp_path, monkeypa
     assert len(calls) == 2
 
 
-def _oracle_route_counts(pages_dir: str) -> dict[str, int]:
-    """{oversized, ignored, kept, rows_in} from the DuckDB q_route_counts."""
-    import os
-
-    import duckdb
-
-    from mongo_log_parser_spark.contracts import log_oracle
-
-    con = duckdb.connect()
-    try:
-        rows = con.sql(log_oracle.q_route_counts(
-            os.path.join(pages_dir, "*.parquet"))).fetchall()
-    finally:
-        con.close()
-    counts = {stream: int(n) for stream, n in rows}
-    counts["rows_in"] = sum(counts.values())
-    return counts
-
-
 def _manifest_totals(spark, out_dir: str) -> dict[str, int]:
     from mongo_log_parser_spark.plans import manifest
 
@@ -172,7 +154,7 @@ def test_resumable_counts_null_text_pages(spark, two_day_pages, tmp_path):
     assert manifest.run_resumable(spark, path, out)["days_processed"] == 2
     for r in manifest.read_manifest(spark, out).collect():
         assert r["rows_in"] == r["oversized"] + r["ignored"] + r["kept"], r["day"]
-    assert _manifest_totals(spark, out) == _oracle_route_counts(path)
+    assert _manifest_totals(spark, out) == expected_route_counts(path, threads=1)
 
 
 def test_resumable_survives_killed_python_worker(spark, two_day_pages, tmp_path,
@@ -216,7 +198,7 @@ def test_resumable_survives_killed_python_worker(spark, two_day_pages, tmp_path,
     stats = manifest.run_resumable(spark, two_day_pages, out)
     assert (stats["days_already_done"], stats["days_processed"]) == (1, 1)
     assert stats["processed"][0] not in first_day
-    assert _manifest_totals(spark, out) == _oracle_route_counts(two_day_pages)
+    assert _manifest_totals(spark, out) == expected_route_counts(two_day_pages, threads=1)
 
 
 def test_resumable_job_uses_filter_config(spark, two_day_pages, tmp_path):
