@@ -6,15 +6,16 @@ parquet filter/column pushdown, and the salted two-phase aggregate shape."""
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import functions as F
-
-from mongo_log_parser_spark.operators import joins, route, salting
-from mongo_log_parser_spark.plans import pipeline
-from mongo_log_parser_spark.session import build_session
-
+import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from mongo_log_parser_spark.operators import joins, route, salting  # noqa: E402
+from mongo_log_parser_spark.plans import pipeline  # noqa: E402
+from mongo_log_parser_spark.session import build_session  # noqa: E402
 
 
 def fmt(df, max_lines=40):
@@ -81,7 +82,7 @@ def main():
         fmt(shard_sinks["shard_main_ops"], 34),
     ))
 
-    with open("PLANS.md", "w") as f:
+    with open(os.path.join(_ROOT, "PLANS.md"), "w") as f:
         f.write("# PLANS — physical-plan evidence (`explain('formatted')`, sf0.001, local[8])\n\n")
         f.write("Generated by scripts/gen_plans.py; regenerate after plan-affecting changes. "
                 "Hand-written plan notes are in [PLANS_NOTES.md](PLANS_NOTES.md).\n\n")
